@@ -1770,7 +1770,11 @@ def _ann_ivf_oracle_sql() -> str:
     """DuckDB re-implementation of q_ann_ivf_topk: the centroids are
     re-trained from the same parquet sample with the same NumPy code at
     SQL-build time and inlined as literals; assignment uses the identical
-    first-occurrence argmax (list_indexof of list_max)."""
+    first-occurrence argmax (list_indexof of list_max).
+
+    The inlined centroids are always trained on the sf0.01 sample, so this
+    oracle matches q_ann_ivf_topk only when the query also runs at sf0.01;
+    at any other scale factor the two train different centroids."""
     centroids = _ivf_centroids_for("/root/testdata/sf0.01")
 
     def dot(plane: list[float]) -> str:
@@ -1813,7 +1817,8 @@ def _ann_ivf_multiprobe_oracle_sql() -> str:
     re-trained centroid literals; query probes = top-IVF_NPROBE centroids
     by (sim DESC, index ASC) — the same deterministic rule as the Spark
     side's struct sort on (-sim, idx); corpus keeps its single
-    first-occurrence-argmax assignment."""
+    first-occurrence-argmax assignment. Like _ann_ivf_oracle_sql, the
+    centroids are trained at sf0.01, so it matches only at that sf."""
     centroids = _ivf_centroids_for("/root/testdata/sf0.01")
 
     def dot(plane: list[float]) -> str:

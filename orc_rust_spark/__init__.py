@@ -21,6 +21,14 @@ Layers
 
 Everything below the DataFrame API lives in vectorized NumPy kernels invoked
 from Arrow-batched pandas UDFs — never per-row Python.
+
+Importing the package inside a PySpark worker installs
+``worker_setup``'s guard against the per-task re-read of zip archives on
+the worker path (a no-op in the Spark driver and on CPython >= 3.13).
 """
 
+from orc_rust_spark import worker_setup as _worker_setup
+
 __version__ = "0.1.0"
+
+_worker_setup.install()

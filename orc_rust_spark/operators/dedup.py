@@ -127,10 +127,12 @@ def minhash_signatures(
     hash_family:
       - "xxhash64": perm_i = xxhash64(i, shingle) -> int64 (fastest; the
         production path)
-      - "md5":      perm_i = md5(f"{i}|" + shingle) -> hex string, minimum
-        taken lexicographically. md5 is computed identically by DuckDB, so
-        an external SQL engine can recompute the EXACT signatures — this
-        is what makes the LSH operator oracle-verifiable end to end.
+      - "md5":      one md5 per shingle; h1 = its first 15 hex digits and
+        h2 = the next 8, as integers; perm_i = (h1 + i*h2) mod (2^61-1),
+        minimum taken numerically -> int64. md5 and this integer
+        arithmetic are computed identically by DuckDB, so an external SQL
+        engine can recompute the EXACT signatures — this is what makes
+        the LSH operator oracle-verifiable end to end.
 
     ``with_card`` additionally emits ``card`` = the document's distinct-
     shingle count (the rows feeding each signature ARE the exploded
@@ -305,7 +307,8 @@ def minhash_lsh_pairs(
     # jaccard >= t forces min(|A|,|B|) >= t * max(|A|,|B|). Pairs failing
     # the bound are provably below threshold and are dropped before they
     # ever reach the distinct / verify shuffles (measured: 35% of all
-    # candidate pairs at the sf1 proxy).
+    # candidate pairs at the sf1 proxy). Acceptance is round(j, 6) >= t,
+    # which holds down to j = t - 5e-7, so the bound uses that floor.
     cand = (
         x.join(
             y,
@@ -313,7 +316,8 @@ def minhash_lsh_pairs(
             & (F.col("x.bucket") == F.col("y.bucket"))
             & (F.col("x.id") < F.col("y.id"))
             & (F.least(F.col("x.card"), F.col("y.card"))
-               >= F.lit(threshold) * F.greatest(F.col("x.card"), F.col("y.card"))),
+               >= F.lit(threshold - 5e-7)
+               * F.greatest(F.col("x.card"), F.col("y.card"))),
         )
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
         .distinct()

@@ -5,6 +5,14 @@
 - glibc malloc tuning exported to Python workers: this sandbox has very
   slow first-touch pages, so worker processes must reuse freed arenas
   instead of munmap-ing them (MALLOC_MMAP_THRESHOLD_/MALLOC_TRIM_THRESHOLD_).
+- reused Python workers (``spark.python.worker.reuse``). Per-task Python
+  worker cost: before every task PySpark calls
+  ``importlib.invalidate_caches()``, which on CPython < 3.13 re-parses
+  every zip archive on the worker path (``pyspark.zip`` once per package
+  prefix, the spark-core jar twice): ~185 ms per task on a 4-core host
+  before the UDF starts. Importing the engine in a worker installs
+  ``worker_setup``'s stat-guarded cache, which skips the re-read while an
+  archive is unchanged (0.2 ms); see ``scripts/worker_setup_probe.py``.
 """
 
 from __future__ import annotations

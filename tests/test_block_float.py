@@ -75,6 +75,7 @@ class TestLzo:
         src = bytes([17 + 2]) + b"ab" + bytes([0b11100100, 0]) + b"\x11\x00\x00"
         assert lzo1x_decompress(src) == b"ab" + b"ab" * 4
 
+    @pytest.mark.reference_fixture
     def test_lzo_orc_file_matches_uncompressed_twin(self):
         """Read-compat against an independently produced LZO ORC file (the
         official alltypes example pair); skipped when the fixture dir is

@@ -27,6 +27,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 DATA = "/root/reference/tests/integration/data"
 
+# every test here reads the reference corpus; conftest counts the skips
+pytestmark = pytest.mark.reference_fixture
+
 # fixtures liborc itself cannot read in this container (no oracle), or
 # that use features that are out of contracted scope — each with why
 SKIP = {
@@ -104,6 +107,8 @@ def test_union_ts_ns_unit():
     from orc_rust_spark.sources.orc_file import orc_to_table
 
     path = f"{DATA}/TestOrcFile.testUnionAndTimestamp.orc"
+    if not os.path.exists(path):
+        _pytest.skip("official union example file not available")
     ref = paorc.ORCFile(path).read()
     ours = orc_to_table(path, timestamp_unit="ns")
     assert ours.num_rows == ref.num_rows

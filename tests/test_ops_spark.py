@@ -88,6 +88,29 @@ def test_minhash_lsh_size_bound_boundary(spark):
     assert cards == {1: 2, 2: 4}
 
 
+def test_minhash_lsh_size_bound_rounded_boundary(spark):
+    """Acceptance is round(jaccard, 6) >= t, so the size bound must keep a
+    pair whose raw Jaccard is just BELOW t but rounds up to it: 2 of 3
+    shingles shared gives j = 0.6666667 < t = 0.666667, round(j, 6) = t,
+    and min = 2 < t * max = 2.000001 — only the rounding-aware bound
+    min >= (t - 5e-7) * max keeps it."""
+    from orc_rust_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = spark.createDataFrame(
+        [
+            (1, "alpha beta gamma"),        # {alpha beta, beta gamma}
+            (2, "alpha beta gamma delta"),  # + {gamma delta}
+        ],
+        ["doc_id", "text"],
+    )
+    t = 0.666667
+    assert 2 / 3 < t and round(2 / 3, 6) == t and 2 < t * 3
+    pairs = {(r.id_a, r.id_b): r.jaccard
+             for r in minhash_lsh_pairs(
+                 docs, n=2, num_perm=32, bands=32, threshold=t).collect()}
+    assert pairs.get((1, 2)) == t
+
+
 def test_simhash_hamming(spark, docs):
     from orc_rust_spark.operators.dedup import simhash, simhash_neardup_pairs
 

@@ -388,6 +388,7 @@ def test_write_orc_rlev1_read_by_pyarrow(tmp_path):
 ORC_EXAMPLES = "/root/reference/tests/integration/data"
 
 
+@pytest.mark.reference_fixture
 def test_union_type_tagged_struct_expansion():
     """ORC UNION (src/array_decoder/union.rs:36-163): byte-RLE tag stream
     + per-variant dense children, decoded to the Spark-expressible

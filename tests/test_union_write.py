@@ -92,6 +92,7 @@ def test_union_write_read_by_liborc(tmp_path):
             assert f1[r] == src.field("f1")[r].as_py()
 
 
+@pytest.mark.reference_fixture
 def test_union_official_fixture_rewrite(tmp_path):
     """Full-circle parity with the reference's own union test data:
     decode TestOrcFile.testUnionAndTimestamp with our reader, WRITE the
