@@ -1293,10 +1293,10 @@ def q_pruned_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (row_group_filter.rs + bloom_filter.rs + row_index.rs analogs): typed
     min/max comparison prunes whole chunks, then surviving chunks decode
     only the 10k-row groups whose per-group stats may match."""
-    from orc_rust_spark.operators.pruned_read import pruned_point_lookup_rg
+    from orc_rust_spark.operators.pruned_read import pruned_point_lookup
 
     schema, chunks, probe = _lineitem_chunks(spark, sf_dir)
-    rows, _keys = pruned_point_lookup_rg(chunks, schema, "l_orderkey", probe)
+    rows, _keys = pruned_point_lookup(chunks, schema, "l_orderkey", probe)
     return rows
 
 

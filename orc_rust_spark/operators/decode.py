@@ -6,20 +6,18 @@ operators.encode, playing the role of the reference's NaiveStripeDecoder
 DATA/LENGTH/SECONDARY/DICTIONARY_DATA through the block decompressor and
 the RLE/FSST decoders, then re-space nulls.
 
-Two execution strategies over the same Arrow-array core:
-- decode_table        groupBy(part_id, chunk_ord).applyInPandas — robust,
-                      works on any row layout
-- decode_table_arrow  repartition+sortWithinPartitions then mapInArrow —
-                      decoded values stay Arrow end to end (no Python
-                      string objects), the fast path
+One execution strategy: decode_table_arrow co-locates each chunk's stream
+rows (repartition+sortWithinPartitions) and decodes them in mapInArrow, so
+decoded values stay Arrow end to end (no Python string objects). Given a
+predicate it also skips the row groups the predicate rules out.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,51 +32,8 @@ from ..codecs.rle_v2 import decode_rlev2
 from ..codecs.timestamp_split import combine_timestamp_us
 from ..sources import chunk_table as ct
 
-
-def _kind_of(dt: T.DataType) -> str:
-    if isinstance(dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
-        return "int64"
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return "timestamp"
-    if isinstance(dt, T.DateType):
-        return "date"
-    if isinstance(dt, T.DoubleType):
-        return "float64"
-    if isinstance(dt, T.FloatType):
-        return "float32"
-    if isinstance(dt, T.BooleanType):
-        return "bool"
-    if isinstance(dt, T.StringType):
-        return "string"
-    if isinstance(dt, T.BinaryType):
-        return "binary"
-    if isinstance(dt, T.DecimalType):
-        return f"decimal:{dt.precision}:{dt.scale}"
-    if isinstance(dt, (T.ArrayType, T.StructType, T.MapType)):
-        return "nested"
-    raise TypeError(f"unsupported type {dt}")
-
-
-_KIND_TO_TYPE = {
-    "int64": T.LongType(),
-    "timestamp": T.TimestampNTZType(),
-    "date": T.DateType(),
-    "float64": T.DoubleType(),
-    "float32": T.FloatType(),
-    "bool": T.BooleanType(),
-    "string": T.StringType(),
-    "binary": T.BinaryType(),
-}
-
-
-def _as_datatype(kind_or_dt) -> T.DataType:
-    """Accept legacy string kinds or Spark DataTypes."""
-    if isinstance(kind_or_dt, T.DataType):
-        return kind_or_dt
-    if kind_or_dt.startswith("decimal:"):
-        _, p, s = kind_or_dt.split(":")
-        return T.DecimalType(int(p), int(s))
-    return _KIND_TO_TYPE[kind_or_dt]
+if TYPE_CHECKING:
+    from .predicate import Predicate
 
 
 def _arrow_of(dt: T.DataType) -> pa.DataType:
@@ -128,7 +83,7 @@ def _respace(dense: pa.Array, not_null: np.ndarray) -> pa.Array:
 
 
 def decode_chunk_arrays(
-    stream_rows: list[dict], col_kinds: dict[str, str | T.DataType],
+    stream_rows: list[dict], col_kinds: dict[str, T.DataType],
     rg_keep: list[int] | None = None,
 ) -> dict[str, pa.Array]:
     """Decode one chunk's stream rows -> {column: pa.Array} (dense schema).
@@ -137,8 +92,8 @@ def decode_chunk_arrays(
     row index (operators.encode ROW_INDEX analog); None decodes all.
 
     ``stream_rows``: dicts with column/stream_kind/codec/block_codec/data/
-    row_count/null_count/dict_size. ``col_kinds`` values are legacy string
-    kinds (scalar columns) or Spark DataTypes (required for nested types).
+    row_count/null_count/dict_size (+ stats_json for a row index).
+    ``col_kinds`` maps each column to its Spark DataType.
     Nested columns recurse through child stream columns named
     ``parent.item`` / ``parent.<field>`` / ``parent.key|value`` — the
     offsets trick of the reference's list/struct/map decoders
@@ -149,8 +104,8 @@ def decode_chunk_arrays(
         by_col.setdefault(r["column"], {})[r["stream_kind"]] = r
     if rg_keep is None:
         return {
-            name: _decode_column(name, _as_datatype(kind), by_col)
-            for name, kind in col_kinds.items()
+            name: _decode_column(name, dt, by_col)
+            for name, dt in col_kinds.items()
         }
     # group-filtered decode: indexed columns skip straight to the kept
     # groups; any non-indexed sibling decodes fully and is row-sliced to
@@ -161,13 +116,12 @@ def decode_chunk_arrays(
     grids = [g for g in (_rg_of(by_col[n]) for n in col_kinds) if g is not None]
     if grids and any(g["n"] != grids[0]["n"] for g in grids[1:]):
         return {
-            name: _decode_column(name, _as_datatype(kind), by_col)
-            for name, kind in col_kinds.items()
+            name: _decode_column(name, dt, by_col)
+            for name, dt in col_kinds.items()
         }
     grid = grids[0] if grids else None
     out: dict[str, pa.Array] = {}
-    for name, kind in col_kinds.items():
-        dt = _as_datatype(kind)
+    for name, dt in col_kinds.items():
         if _rg_of(by_col[name]) is not None:
             out[name] = _decode_column(name, dt, by_col, rg_keep=rg_keep)
         else:
@@ -253,8 +207,8 @@ def _decode_column(
 ) -> pa.Array:
     metas = by_col[name]
     streams = {
-        # data may be bytes (pandas path) or a zero-copy memoryview
-        # (arrow path); decompress_stream accepts any bytes-like
+        # data may be bytes or a zero-copy memoryview; decompress_stream
+        # accepts any bytes-like
         k: blockc.decompress_stream(r["data"], r["block_codec"])
         for k, r in metas.items()
     }
@@ -287,9 +241,6 @@ def _decode_column(
         dense = pa.MapArray.from_arrays(_int32_offsets(lengths), keys, items)
         return _respace(dense, not_null) if not_null is not None else dense
 
-    kind = _kind_of(dt)
-    if isinstance(dt, T.DecimalType):
-        kind = f"decimal:{dt.precision}:{dt.scale}"
     data_meta = metas[ct.DATA]
     codec = data_meta["codec"]
     if codec == "rle_v2":
@@ -312,10 +263,9 @@ def _decode_column(
             i128_words,
         )
 
-        _, p, s = kind.split(":")
         try:
             mantissa = decode_decimal(
-                streams[ct.DATA], streams[ct.SECONDARY], n_dense, int(s)
+                streams[ct.DATA], streams[ct.SECONDARY], n_dense, dt.scale
             )
             words = np.empty((n_dense, 2), dtype=np.uint64)
             words[:, 0] = mantissa.view(np.uint64)
@@ -324,7 +274,7 @@ def _decode_column(
             # mantissas wider than 64-bit zigzag: exact i128 slow path
             words = i128_words(decode_varints_exact(streams[ct.DATA], n_dense))
         dense = pa.Array.from_buffers(
-            pa.decimal128(int(p), int(s)), n_dense,
+            pa.decimal128(dt.precision, dt.scale), n_dense,
             [None, pa.py_buffer(words.tobytes())],
         )
     elif codec == "date":
@@ -336,7 +286,7 @@ def _decode_column(
         u8 = decode_byte_rle(streams[ct.DATA], n_dense)
         dense = pa.array(u8.view(np.int8), type=pa.int8())
     elif codec == "float_plain":
-        dtype = np.float32 if kind == "float32" else np.float64
+        dtype = np.float32 if isinstance(dt, T.FloatType) else np.float64
         dense = pa.array(decode_float(streams[ct.DATA], n_dense, dtype))
     elif codec == "boolean_rle":
         dense = pa.array(decode_boolean_rle(streams[ct.DATA], n_dense))
@@ -358,56 +308,12 @@ def _decode_column(
             flat, _ = fsst_decode(streams[ct.DATA], span, table)
             lengths = decode_rlev2(streams[ct.LENGTH], n_dense, signed=False)
             dense = _split_binary(flat, lengths)
-        if kind == "string":
+        if isinstance(dt, T.StringType):
             dense = dense.cast(pa.large_string())
     else:
         raise ValueError(f"unknown codec {codec!r} for column {name!r}")
 
     return _respace(dense, not_null) if not_null is not None else dense
-
-
-def _rows_to_stream_dicts(pdf: pd.DataFrame) -> list[dict]:
-    return pdf[
-        ["column", "stream_kind", "codec", "block_codec", "data",
-         "row_count", "null_count", "dict_size", "stats_json"]
-    ].to_dict("records")
-
-
-def decode_chunk_pdf(
-    pdf: pd.DataFrame, col_kinds: dict, rg_keep: list[int] | None = None
-) -> pd.DataFrame:
-    arrays = decode_chunk_arrays(_rows_to_stream_dicts(pdf), col_kinds, rg_keep=rg_keep)
-    cols = {}
-    for name, arr in arrays.items():
-        kind = _kind_of(_as_datatype(col_kinds[name]))
-        if kind == "timestamp":
-            cols[name] = arr.cast(pa.timestamp("us")).to_pandas()
-        elif kind in ("string", "binary", "bool", "nested"):
-            cols[name] = arr.to_pandas()  # object dtype, None for nulls
-        else:
-            s = arr.to_pandas()
-            if kind == "int64" and arr.null_count:
-                s = pd.array(s, dtype="Int64")
-            cols[name] = s
-    return pd.DataFrame(cols, columns=list(col_kinds.keys()))
-
-
-def decode_table(
-    chunks: DataFrame, schema: T.StructType,
-    group_cols: tuple[str, ...] = ("part_id", "chunk_ord"),
-) -> DataFrame:
-    """Chunk-table DataFrame -> DataFrame with the original schema
-    (grouped applyInPandas strategy).
-
-    ``group_cols`` identifies one chunk; streaming sinks that land one
-    directory per micro-batch reuse task-local part_ids across batches and
-    pass ("stream_batch_id", "part_id", "chunk_ord")."""
-    col_kinds = {f.name: f.dataType for f in schema.fields}
-
-    def decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return decode_chunk_pdf(pdf, col_kinds)
-
-    return chunks.groupBy(*group_cols).applyInPandas(decode_group, schema=schema)
 
 
 def _binary_views(arr: pa.Array) -> list[memoryview]:
@@ -424,8 +330,10 @@ def _binary_views(arr: pa.Array) -> list[memoryview]:
 def decode_table_arrow(
     chunks: DataFrame, schema: T.StructType, co_locate: bool = True,
     group_cols: tuple[str, ...] = ("part_id", "chunk_ord"),
+    pred: Predicate | None = None,
 ) -> DataFrame:
-    """Fast path: decode chunk rows to Arrow RecordBatches directly.
+    """Chunk-table DataFrame -> DataFrame with the original schema, decoded
+    to Arrow RecordBatches directly.
 
     Stream metadata is read column-wise off the Arrow batch (no per-row
     Python dicts) and the encoded `data` bytes are zero-copy memoryview
@@ -442,7 +350,13 @@ def decode_table_arrow(
     packed-integer key, so no bound on chunk_ord or part_id magnitude);
     streaming consumers add "stream_batch_id" since per-batch landing
     dirs reuse task-local part_ids.
+
+    ``pred``: decode only the row groups of each chunk that it might match
+    (predicate.rg_keep_for_chunk); every chunk with an index on a predicate
+    column skips the rest. The caller still applies pred to the rows.
     """
+    from .predicate import rg_keep_for_chunk  # predicate imports this module
+
     col_kinds = {f.name: f.dataType for f in schema.fields}
     arrow_schema = pa.schema(
         [pa.field(f.name, _arrow_of(f.dataType)) for f in schema.fields]
@@ -463,7 +377,8 @@ def decode_table_arrow(
         pending_key = None
 
         def flush(rows):
-            arrays = decode_chunk_arrays(rows, col_kinds)
+            rg_keep = None if pred is None else rg_keep_for_chunk(rows, pred)
+            arrays = decode_chunk_arrays(rows, col_kinds, rg_keep=rg_keep)
             cols = []
             for name in names:
                 arr = arrays[name]

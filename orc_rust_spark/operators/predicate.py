@@ -2,30 +2,113 @@
 
 Mirrors the reference's Predicate AST (src/predicate.rs:28-200: Comparison
 with 6 ops, IsNull/IsNotNull, And/Or/Not with negation push-down) and its
-three-valued min/max evaluation (src/row_group_filter.rs:54-205): a chunk
-is skipped only when the predicate is DEFINITELY false given the chunk's
-min/max/null_count; unknown stats keep the chunk. NOT is handled by
+three-valued min/max evaluation (src/row_group_filter.rs:54-205): a unit
+is skipped only when the predicate is DEFINITELY false given the unit's
+min/max/null_count; unknown stats keep the unit. NOT is handled by
 pushing the negation down De Morgan-style (Not(a AND b) -> Not(a) OR
 Not(b), Not(Comparison) -> flipped op), exactly as the reference does,
 because "might match" is not closed under complement.
 
-Typed comparison: chunk stats are persisted as strings; numeric predicate
-values try_cast the stat back to bigint/double before comparing
-(row_group_filter.rs:207-368 typed eval analog; see pruned_read._typed_stat).
+This is the chunk table's only pruning evaluator, applied at two
+granularities with one comparison table (_DEFINITELY_FALSE): whole chunks
+through a Spark expression over the chunk-stats pivot (might_match), and
+row groups inside a surviving chunk over its row index (rg_keep).
+
+Typed comparison: stats are persisted as strings; a probe is compared only
+against the codecs whose stats hold its type (_stat_codecs), after parsing
+the stat back to that type (row_group_filter.rs:207-368 typed eval analog).
 """
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources import chunk_table as ct
-from .pruned_read import MAX_STAT_LEN, _rg_keep_groups, _stat_usable_bound, _typed_stat
+from .decode import decode_table_arrow
+
+MAX_STAT_LEN = 64  # string min/max truncation length used by the encoder
 
 _NEG_OP = {"=": "!=", "!=": "=", "<": ">=", "<=": ">", ">": "<=", ">=": "<"}
+
+_INT_CODECS = ("rle_v2", "rle_v1", "byte_rle", "date", "timestamp_split")
+
+# `column op v` is DEFINITELY false for a unit whose values lie in
+# [mn, mx]. Evaluated over Spark Columns for chunks (NULL = unknown) and
+# over Python values for row groups (pd.NA = unknown): both follow Kleene
+# logic, so an unknown bound can never prove a unit empty.
+_DEFINITELY_FALSE = {
+    "=": lambda mn, mx, v: (mx < v) | (mn > v),
+    "!=": lambda mn, mx, v: (mn == v) & (mx == v),  # every value equals v
+    "<": lambda mn, mx, v: mn >= v,
+    "<=": lambda mn, mx, v: mn > v,
+    ">": lambda mn, mx, v: mx <= v,
+    ">=": lambda mn, mx, v: mx < v,
+}
+
+
+def _stat_codecs(value) -> tuple[str, ...]:
+    """Codecs whose min/max stats a probe of this type may be compared
+    against. Stats are str(int) / repr(float) / truncated text, and decimal
+    stats are unscaled mantissas: a Decimal or datetime probe, or a probe
+    of the wrong kind ("10" against ints orders "2" > "10"), would compare
+    against the wrong representation and misprune, so it gets no codec and
+    never prunes."""
+    if isinstance(value, bool):
+        return ("boolean_rle",)
+    if isinstance(value, (int, float)):
+        return _INT_CODECS + ("float_plain",)
+    if isinstance(value, str):
+        return ("direct", "dict", "fsst")
+    return ()
+
+
+def _typed_stat(stat_col: str, bound):
+    """(comparable stat Column, literal) with TYPED comparison semantics:
+    numeric bounds try_cast the persisted stat string back to bigint/double
+    ("1004" < "500" as strings); an uncastable stat yields NULL, which the
+    three-valued logic keeps."""
+    c = F.col(stat_col)
+    if isinstance(bound, bool):
+        return c.try_cast("boolean"), F.lit(bound)
+    if isinstance(bound, int):
+        return c.try_cast("bigint"), F.lit(int(bound))
+    if isinstance(bound, float):
+        return c.try_cast("double"), F.lit(float(bound))
+    return c, F.lit(str(bound))
+
+
+def _rg_keep_groups(rg: dict, op: str, value) -> list[int]:
+    """Row groups of one indexed column whose [min, max] might satisfy
+    ``column op value``. Group stats are strings of the codec's monotone
+    integer/float/string encoding, parsed back by the chunk codec."""
+    n_groups = len(rg["n"])
+    if rg["codec"] not in _stat_codecs(value):
+        return list(range(n_groups))
+    parse = int if rg["codec"] in _INT_CODECS else float if rg["codec"] == "float_plain" else str
+
+    def typed(stat):
+        try:
+            return pd.NA if stat is None else parse(stat)
+        except ValueError:
+            return pd.NA  # unparsable stat: unknown -> keep
+
+    definitely_false = _DEFINITELY_FALSE[op]
+    keep = []
+    for g in range(n_groups):
+        mn, mx = typed(rg["min"][g]), typed(rg["max"][g])
+        # a string max at the truncation limit is a PREFIX of the true max
+        # (a lower bound), unusable as an upper bound; a min prefix is sound
+        if isinstance(mx, str) and len(mx) >= MAX_STAT_LEN:
+            mx = pd.NA
+        if definitely_false(mn, mx, value) is not True:
+            keep.append(g)
+    return keep
 
 
 class Predicate:
@@ -65,48 +148,17 @@ class Comparison(Predicate):
         return Comparison(self.col, _NEG_OP[self.op], self.value)
 
     def might_match(self) -> Column:
-        # the same probe-usability and codec-compatibility guards as
-        # prune_chunks_stats / rg_keep (code-review r6): a datetime or
-        # Decimal probe would compare lexicographically against
-        # epoch/mantissa stat strings and wrongly prune, and decimal
-        # mantissa stats are never comparable to user values
-        if not _stat_usable_bound(self.value):
+        codecs = _stat_codecs(self.value)
+        if not codecs:
             return F.lit(True)
-        codec = F.col(f"codec__{self.col}")
-        numeric_codecs = ("rle_v2", "rle_v1", "byte_rle", "date",
-                          "timestamp_split")
-        if isinstance(self.value, bool):
-            comparable = codec == "boolean_rle"
-        elif isinstance(self.value, (int, float)):
-            comparable = codec.isin(*numeric_codecs, "float_plain")
-        elif isinstance(self.value, str):
-            comparable = ~codec.isin(
-                *numeric_codecs, "decimal", "float_plain", "boolean_rle")
-        else:
-            comparable = F.lit(False)
         min_stat, lit = _typed_stat(f"min__{self.col}", self.value)
         max_stat, _ = _typed_stat(f"max__{self.col}", self.value)
-        # a string max truncated to MAX_STAT_LEN chars is an unusable upper
-        # bound (the true max extends past the prefix)
-        if isinstance(self.value, str):
+        if isinstance(self.value, str):  # truncated max: no upper bound
             max_stat = F.when(
                 F.length(F.col(f"max__{self.col}")) < MAX_STAT_LEN, max_stat
             )
-        if self.op == "=":
-            definitely_false = (max_stat < lit) | (min_stat > lit)
-        elif self.op == "!=":
-            # false only when every value in the chunk equals v
-            definitely_false = (min_stat == lit) & (max_stat == lit)
-        elif self.op == "<":
-            definitely_false = min_stat >= lit
-        elif self.op == "<=":
-            definitely_false = min_stat > lit
-        elif self.op == ">":
-            definitely_false = max_stat <= lit
-        elif self.op == ">=":
-            definitely_false = max_stat < lit
-        else:
-            raise ValueError(f"unknown op {self.op!r}")
+        comparable = F.col(f"codec__{self.col}").isin(*codecs)
+        definitely_false = _DEFINITELY_FALSE[self.op](min_stat, max_stat, lit)
         return ~(comparable & definitely_false).eqNullSafe(F.lit(True))
 
     def to_spark(self) -> Column:
@@ -117,48 +169,10 @@ class Comparison(Predicate):
         }[self.op]
 
     def rg_keep(self, rg_by_col: dict, n_groups: int) -> set[int]:
-        """Delegates the shared typed three-valued evaluation to
-        pruned_read._rg_keep_groups (one implementation for both pruning
-        paths — code-review r6); only the != op, which the lo/hi algebra
-        cannot express, is handled here."""
         rg = rg_by_col.get(self.col)
-        universe = set(range(n_groups))
         if rg is None or len(rg["n"]) != n_groups:
-            return universe
-        v, op = self.value, self.op
-        if op == "!=":
-            if rg["codec"] == "decimal" or not _stat_usable_bound(v):
-                return universe
-            numeric = rg["codec"] in (
-                "rle_v2", "rle_v1", "byte_rle", "date", "timestamp_split")
-            floaty = rg["codec"] == "float_plain"
-            stringy = not numeric and not floaty
-            if stringy != isinstance(v, str):
-                return universe
-
-            def parse(x):
-                try:
-                    return int(x) if numeric else float(x) if floaty else x
-                except (TypeError, ValueError):
-                    return None
-
-            keep = set()
-            for g in range(n_groups):
-                mn, mx = parse(rg["min"][g]), parse(rg["max"][g])
-                mx_usable = not (stringy and isinstance(mx, str)
-                                 and len(mx) >= MAX_STAT_LEN)
-                # false only when every value in the group equals v
-                if not (mn is not None and mx_usable and mn == v and mx == v):
-                    keep.add(g)
-            return keep
-        kw = {
-            "=": {"eq_value": v},
-            "<": {"hi": v, "hi_strict": True},
-            "<=": {"hi": v},
-            ">": {"lo": v, "lo_strict": True},
-            ">=": {"lo": v},
-        }[op]
-        return set(_rg_keep_groups(rg, **kw))
+            return set(range(n_groups))
+        return set(_rg_keep_groups(rg, self.op, self.value))
 
 
 @dataclass(frozen=True)
@@ -319,18 +333,16 @@ def prune_chunks_predicate(chunks: DataFrame, pred: Predicate) -> DataFrame:
     return pivot.where(pred.might_match()).select("part_id", "chunk_ord")
 
 
-def rg_keep_for_chunk(pdf, pred: Predicate) -> list[int] | None:
-    """Composed row-group keep list for one chunk's stream rows (pandas
-    frame), or None when no column is indexed / nothing can be skipped."""
-    import json
-
+def rg_keep_for_chunk(rows: list[dict], pred: Predicate) -> list[int] | None:
+    """Composed row-group keep list for one chunk's stream-row dicts, or
+    None when no predicate column is indexed / nothing can be skipped."""
+    cols = pred.columns()
     rg_by_col: dict[str, dict] = {}
-    sel = pdf[pdf["stream_kind"] == ct.DATA]
-    for col, sj in zip(sel["column"], sel["stats_json"]):
-        if sj:
-            rg = json.loads(sj).get("rg")
+    for r in rows:
+        if r["stream_kind"] == ct.DATA and r["column"] in cols and r["stats_json"]:
+            rg = json.loads(r["stats_json"]).get("rg")
             if rg:
-                rg_by_col[col] = rg
+                rg_by_col[r["column"]] = rg
     if not rg_by_col:
         return None
     grids = list(rg_by_col.values())
@@ -346,6 +358,16 @@ def rg_keep_for_chunk(pdf, pred: Predicate) -> list[int] | None:
     return None if len(keep) >= n_groups else keep
 
 
+def _decode_pruned(
+    chunks: DataFrame, schema: T.StructType, pred: Predicate, keys: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """-> (rows satisfying pred exactly, keys): decode only the chunks in
+    ``keys``, each skipping the row groups pred rules out, then apply pred
+    as the residual filter."""
+    pruned = chunks.join(F.broadcast(keys), ["part_id", "chunk_ord"], "left_semi")
+    return decode_table_arrow(pruned, schema, pred=pred).where(pred.to_spark()), keys
+
+
 def pruned_scan(
     chunks: DataFrame, schema: T.StructType, pred: Predicate
 ) -> tuple[DataFrame, DataFrame]:
@@ -357,17 +379,4 @@ def pruned_scan(
     reference's RowSelection and_then/union, src/row_selection.rs:32-260)
     so a multi-column predicate skips groups on every indexed column, not
     just one."""
-    import pandas as pd
-
-    keys = prune_chunks_predicate(chunks, pred)
-    pruned = chunks.join(F.broadcast(keys), ["part_id", "chunk_ord"], "left_semi")
-    from .decode import decode_chunk_pdf
-
-    col_types = {f.name: f.dataType for f in schema.fields}
-
-    def decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return decode_chunk_pdf(pdf, col_types, rg_keep=rg_keep_for_chunk(pdf, pred))
-
-    decoded = pruned.groupBy("part_id", "chunk_ord").applyInPandas(
-        decode_group, schema=schema)
-    return decoded.where(pred.to_spark()), keys
+    return _decode_pruned(chunks, schema, pred, prune_chunks_predicate(chunks, pred))

@@ -2,14 +2,15 @@
 reference's row-group predicate pushdown (src/row_group_filter.rs:54-205)
 and bloom pruning (:370-408).
 
-A point/range lookup first evaluates chunk-level metadata:
-- min/max statistics (three-valued: definitely-false chunks are skipped;
-  string max values truncated at 64 chars are treated as unbounded)
-- the BLOOM_FILTER stream for equality predicates (maybe-present test)
+A point lookup first evaluates chunk-level metadata:
+- min/max statistics, through the predicate evaluator
+  (operators.predicate: three-valued and typed; string max values
+  truncated at 64 chars are treated as unbounded)
+- the BLOOM_FILTER stream for the equality probe (maybe-present test)
 
-and only then decodes the surviving chunks. The metadata pass is a pandas
-UDF over chunk rows (distributed — at 10^12-doc scale the chunk table is
-itself big), the decode pass reuses operators.decode.
+and only then decodes the surviving chunks, each skipping the row groups
+whose index rules the value out. The bloom pass is a pandas UDF over chunk
+rows (distributed — at 10^12-doc scale the chunk table is itself big).
 """
 
 from __future__ import annotations
@@ -22,76 +23,7 @@ from pyspark.sql import types as T
 from ..codecs import block as blockc
 from ..codecs.bloom import BloomFilter
 from ..sources import chunk_table as ct
-from .decode import decode_table
-
-MAX_STAT_LEN = 64  # string min/max truncation length used by the encoder
-
-
-def _typed_stat(stat_col: str, bound):
-    """(comparable stat Column, literal) with TYPED comparison semantics.
-
-    Stats are persisted as strings (str(int) / repr(float) / truncated
-    text); comparing them lexicographically against numeric bounds is
-    wrong ("1004" < "500"), mirroring why the reference evaluates typed
-    min/max per column type (src/row_group_filter.rs:207-368). Numeric
-    bounds therefore try_cast the stat back to bigint/double; a stat that
-    fails the cast yields NULL, and NULL comparisons are handled by the
-    caller's three-valued keep-by-default logic.
-    """
-    c = F.col(stat_col)
-    if isinstance(bound, bool):
-        return c.try_cast("boolean"), F.lit(bound)
-    if isinstance(bound, int):
-        return c.try_cast("bigint"), F.lit(int(bound))
-    if isinstance(bound, float):
-        return c.try_cast("double"), F.lit(float(bound))
-    return c, F.lit(str(bound))
-
-
-def _stat_usable_bound(bound) -> bool:
-    """Is this probe type safely comparable against persisted stats?
-
-    Stats are str(int) / repr(float) / truncated text. A Decimal probe
-    would compare a scaled value against an UNSCALED mantissa string, a
-    datetime probe against an epoch-microsecond string — both silently
-    wrong, so such probes disable stats pruning entirely (keep all) rather
-    than misprune. Mirrors the reference's rule of evaluating predicates
-    only for types it has typed stats for (src/row_group_filter.rs:207-368).
-    """
-    return isinstance(bound, (bool, int, float, str))
-
-
-def prune_chunks_stats(
-    chunks: DataFrame, column: str, eq_value=None, lo=None, hi=None
-) -> DataFrame:
-    """Chunks whose [min,max] could intersect the predicate -> keys DF.
-
-    Three-valued logic (reference src/row_group_filter.rs:54-145): a chunk
-    is skipped only when the predicate is DEFINITELY false given its
-    min/max; missing or uncastable stats keep the chunk.
-    """
-    meta = chunks.where(
-        (F.col("column") == column) & (F.col("stream_kind") == ct.DATA)
-    ).select("part_id", "chunk_ord", "codec", "min_val", "max_val")
-    if eq_value is not None:
-        lo = hi = eq_value
-    if not all(_stat_usable_bound(b) for b in (lo, hi) if b is not None):
-        return meta.select("part_id", "chunk_ord")  # unprunable probe type
-    cond = F.lit(True)
-    if lo is not None:
-        max_stat, lo_lit = _typed_stat("max_val", lo)
-        # chunk max < lo -> definitely false (unless string max truncated)
-        max_usable = (
-            F.length(F.col("max_val")) < MAX_STAT_LEN if isinstance(lo, str) else F.lit(True)
-        )
-        cond = cond & ~(max_usable & (max_stat < lo_lit)).eqNullSafe(F.lit(True))
-    if hi is not None:
-        min_stat, hi_lit = _typed_stat("min_val", hi)
-        cond = cond & ~(min_stat > hi_lit).eqNullSafe(F.lit(True))
-    # chunks with no stats are always kept (three-valued logic); decimal
-    # stats are unscaled mantissas, not comparable to user values -> keep
-    cond = (F.col("codec") == "decimal") | F.col("min_val").isNull() | cond
-    return meta.where(cond).select("part_id", "chunk_ord")
+from .predicate import Comparison, _decode_pruned, prune_chunks_predicate
 
 
 def prune_chunks_bloom(chunks: DataFrame, column: str, eq_value) -> DataFrame:
@@ -147,118 +79,14 @@ def pruned_point_lookup(
 ) -> tuple[DataFrame, DataFrame]:
     """-> (decoded rows matching column == value, kept chunk keys).
 
-    Stats pruning AND bloom pruning, then decode only surviving chunks and
-    apply the residual filter on the decoded rows.
+    Stats pruning AND bloom pruning of whole chunks; each surviving chunk
+    written with a row index (plan {col: {"row_index": True}}) decodes only
+    the groups whose min/max may hold the value — the reference's
+    row-index seek model (src/row_index.rs:31-55, stride
+    src/stripe.rs:300). The residual filter gives the exact rows.
     """
-    keys = prune_chunks_stats(chunks, column, eq_value=value).intersect(
+    pred = Comparison(column, "=", value)
+    keys = prune_chunks_predicate(chunks, pred).intersect(
         prune_chunks_bloom(chunks, column, value)
     )
-    pruned = chunks.join(F.broadcast(keys), ["part_id", "chunk_ord"], "left_semi")
-    decoded = decode_table(pruned, schema)
-    return decoded.where(F.col(column) == F.lit(value)), keys
-
-
-def _rg_keep_groups(rg: dict, eq_value=None, lo=None, hi=None,
-                    lo_strict: bool = False, hi_strict: bool = False) -> list[int]:
-    """Row groups whose [min,max] may intersect the predicate (typed —
-    group stats are strings of the codec's monotone integer/float/string
-    encoding; reference row_group_filter.rs three-valued semantics)."""
-    if eq_value is not None:
-        lo = hi = eq_value
-    all_groups = list(range(len(rg["n"])))
-    # decimal group stats are unscaled mantissas — not comparable to user
-    # values; probes of un-stat-comparable types likewise disable pruning
-    if rg["codec"] == "decimal":
-        return all_groups
-    if not all(_stat_usable_bound(b) for b in (lo, hi) if b is not None):
-        return all_groups
-    numeric = rg["codec"] in ("rle_v2", "rle_v1", "byte_rle", "date", "timestamp_split")
-    floaty = rg["codec"] == "float_plain"
-
-    def parse(s):
-        if s is None:
-            return None
-        try:
-            return int(s) if numeric else float(s) if floaty else s
-        except (TypeError, ValueError):
-            return None  # unparsable stat: treat as absent -> keep
-
-    stringy = not numeric and not floaty
-
-    def _compatible(bound) -> bool:
-        if bound is None:
-            return True
-        return isinstance(bound, str) if stringy else isinstance(bound, (bool, int, float))
-
-    if not (_compatible(lo) and _compatible(hi)):
-        return all_groups  # probe/codec type mismatch: never prune
-    keep = []
-    for g in range(len(rg["n"])):
-        mn, mx = parse(rg["min"][g]), parse(rg["max"][g])
-        if mn is None or mx is None:  # no stats (all-null group): keep
-            keep.append(g)
-            continue
-        # a string max stat at the truncation limit is a PREFIX of the true
-        # max — a lower bound, unusable for `max < lo` pruning (mirrors the
-        # chunk-level max_usable guard; min side is sound: prefix <= true min)
-        max_usable = not (stringy and isinstance(mx, str) and len(mx) >= MAX_STAT_LEN)
-        if lo is not None and max_usable and (mx < lo or (lo_strict and mx == lo)):
-            continue
-        if hi is not None and (mn > hi or (hi_strict and mn == hi)):
-            continue
-        keep.append(g)
-    return keep
-
-
-def pruned_point_lookup_rg(
-    chunks: DataFrame, schema: T.StructType, column: str, value
-) -> tuple[DataFrame, DataFrame]:
-    """Point lookup with ROW-GROUP granularity: chunk stats + bloom prune
-    whole chunks, then each surviving chunk decodes ONLY the 10k-row
-    groups whose per-group min/max may match — the reference's row-index
-    seek model (src/row_index.rs:31-55, stride src/stripe.rs:300). The
-    chunk table must have been encoded with plan {col: {"row_index": True}}
-    on every column.
-    """
-    import json
-
-    from .decode import decode_chunk_pdf
-
-    keys = prune_chunks_stats(chunks, column, eq_value=value).intersect(
-        prune_chunks_bloom(chunks, column, value)
-    )
-    pruned = chunks.join(F.broadcast(keys), ["part_id", "chunk_ord"], "left_semi")
-    col_types = {f.name: f.dataType for f in schema.fields}
-
-    def decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        keep = None
-        sel = pdf[(pdf["column"] == column) & (pdf["stream_kind"] == ct.DATA)]
-        for sj in sel["stats_json"]:
-            if sj:
-                rg = json.loads(sj).get("rg")
-                if rg:
-                    keep = _rg_keep_groups(rg, eq_value=value)
-                    if len(keep) >= len(rg["n"]):
-                        keep = None  # nothing skippable: bulk decode path
-                break
-        return decode_chunk_pdf(pdf, col_types, rg_keep=keep)
-
-    decoded = pruned.groupBy("part_id", "chunk_ord").applyInPandas(decode_group, schema=schema)
-    return decoded.where(F.col(column) == F.lit(value)), keys
-
-
-def pruned_range_scan(
-    chunks: DataFrame, schema: T.StructType, column: str, lo, hi
-) -> tuple[DataFrame, DataFrame]:
-    """-> (decoded rows with lo <= column <= hi, kept chunk keys)."""
-    keys = prune_chunks_stats(chunks, column, lo=lo, hi=hi)
-    pruned = chunks.join(F.broadcast(keys), ["part_id", "chunk_ord"], "left_semi")
-    decoded = decode_table(pruned, schema)
-    # open-ended bounds (supported by prune_chunks_stats) must not turn
-    # into between(NULL, ...), which filters every row (code-review r6)
-    cond = F.lit(True)
-    if lo is not None:
-        cond = cond & (F.col(column) >= F.lit(lo))
-    if hi is not None:
-        cond = cond & (F.col(column) <= F.lit(hi))
-    return decoded.where(cond), keys
+    return _decode_pruned(chunks, schema, pred, keys)

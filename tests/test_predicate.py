@@ -165,9 +165,9 @@ def test_pruned_scan_rg_composition_end_to_end(spark):
             if i >= 2500 and (chr(ord("a") + (i * 26) // n) * 3) < "j"]
     assert got == want
     # the composed keep list is strictly smaller than either single-column
-    pdf = chunks.toPandas()
-    single_id = rg_keep_for_chunk(pdf, Comparison("id", ">=", 2500))
-    composed = rg_keep_for_chunk(pdf, pred)
+    stream_rows = [r.asDict() for r in chunks.collect()]
+    single_id = rg_keep_for_chunk(stream_rows, Comparison("id", ">=", 2500))
+    composed = rg_keep_for_chunk(stream_rows, pred)
     assert composed is not None and len(composed) < len(single_id)
     chunks.unpersist()
 
@@ -221,16 +221,51 @@ def test_bloom_type_mismatch_keeps_chunks(spark):
     assert prune_chunks_bloom(chunks, "s", "not-present").count() < total
 
 
-def test_pruned_range_scan_open_bounds(spark):
-    from orc_rust_spark.operators.pruned_read import pruned_range_scan
-
+def test_pruned_scan_one_sided_bounds(spark):
     df = spark.createDataFrame([(i,) for i in range(1000)], "id long").coalesce(1)
     chunks = encode_table(df).cache()
     schema = T.StructType([T.StructField("id", T.LongType())])
-    lo_open, _ = pruned_range_scan(chunks, schema, "id", None, 100)
+    lo_open, _ = pruned_scan(chunks, schema, Comparison("id", "<=", 100))
     assert lo_open.count() == 101
-    hi_open, _ = pruned_range_scan(chunks, schema, "id", 900, None)
+    hi_open, _ = pruned_scan(chunks, schema, Comparison("id", ">=", 900))
     assert hi_open.count() == 100
+
+
+def test_pruned_scan_chunks_straddling_arrow_batches(spark):
+    """With a few rows per Arrow batch every chunk's stream rows span
+    several batches, so the row-group keep list must be computed on the
+    whole chunk after the carry-over, not on a batch's fragment."""
+    n = 6000
+    df = spark.createDataFrame(
+        [(i, f"t{n - i:05d}", float(i % 13)) for i in range(n)],
+        "id long, tag string, val double",
+    ).repartitionByRange(2, "id")
+    plan = {c: {"row_index": True, "row_index_stride": 500} for c in ("id", "tag", "val")}
+    chunks = encode_table(df, plan=plan).cache()
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("tag", T.StringType()),
+        T.StructField("val", T.DoubleType()),
+    ])
+    per_batch = 3
+    rows_per_chunk = chunks.groupBy("part_id", "chunk_ord").count().collect()
+    assert len(rows_per_chunk) == 2
+    assert min(r["count"] for r in rows_per_chunk) > per_batch
+    pred = Or(
+        And(Comparison("id", ">=", 1200), Comparison("id", "<", 1700)),
+        Comparison("id", "=", 5999),
+        And(Comparison("tag", "<", "t00100"), IsNotNull("val")),
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(per_batch))
+    try:
+        got = sorted(pruned_scan(chunks, schema, pred)[0].collect())
+    finally:
+        spark.conf.set(key, old)
+    want = sorted(df.where(pred.to_spark()).collect())
+    assert got == want and len(want) > 500
+    chunks.unpersist()
 
 
 def test_mixed_stride_grids_fall_back_to_full_decode(spark):

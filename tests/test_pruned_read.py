@@ -2,9 +2,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from orc_rust_spark.operators.encode import encode_table
+from orc_rust_spark.operators.predicate import And, Comparison, prune_chunks_predicate
 from orc_rust_spark.operators.pruned_read import (
     prune_chunks_bloom,
-    prune_chunks_stats,
     pruned_point_lookup,
 )
 from orc_rust_spark.sources.webtext import WEBTEXT_SCHEMA, webtext_df
@@ -18,6 +18,10 @@ def encoded(spark):
     chunks = encode_table(df, plan=plan, stripe_bytes=512 * 1024).cache()
     chunks.count()
     return df, chunks
+
+
+def _kept(chunks, pred):
+    return prune_chunks_predicate(chunks, pred).count()
 
 
 def test_bloom_stream_emitted(spark, encoded):
@@ -42,9 +46,9 @@ def test_bloom_pruning_skips_chunks(spark, encoded):
 def test_stats_pruning_ints(spark, encoded):
     df, chunks = encoded
     # warc_ts stats prune: a timestamp-us range beyond the data cuts all chunks
-    kept = prune_chunks_stats(chunks, "warc_ts", lo=9_999_999_999_999_999).count()
+    kept = _kept(chunks, Comparison("warc_ts", ">=", 9_999_999_999_999_999))
     assert kept == 0
-    kept_all = prune_chunks_stats(chunks, "warc_ts", lo=0).count()
+    kept_all = _kept(chunks, Comparison("warc_ts", ">=", 0))
     assert kept_all == chunks.select("part_id", "chunk_ord").distinct().count()
 
 
@@ -62,10 +66,10 @@ def two_chunk_ids(spark):
 def test_stats_pruning_typed_not_lexicographic(spark, two_chunk_ids):
     chunks = two_chunk_ids
     # lo=500 must keep the 995-1004 chunk ("1004" < "500" as strings!)
-    assert prune_chunks_stats(chunks, "id", lo=500).count() == 1
-    assert prune_chunks_stats(chunks, "id", hi=99).count() == 1
-    assert prune_chunks_stats(chunks, "id", lo=100, hi=900).count() == 0
-    assert prune_chunks_stats(chunks, "id", eq_value=998).count() == 1
+    assert _kept(chunks, Comparison("id", ">=", 500)) == 1
+    assert _kept(chunks, Comparison("id", "<=", 99)) == 1
+    assert _kept(chunks, And(Comparison("id", ">=", 100), Comparison("id", "<=", 900))) == 0
+    assert _kept(chunks, Comparison("id", "=", 998)) == 1
 
 
 def test_pruned_point_lookup_mixed_digit_widths(spark, two_chunk_ids):
@@ -82,17 +86,17 @@ def test_stats_pruning_negative_values(spark):
     ids = list(range(-50, -39)) + list(range(40, 51))
     df = spark.createDataFrame([(i,) for i in ids], "id long").repartitionByRange(2, "id")
     chunks = encode_table(df, plan={})
-    assert prune_chunks_stats(chunks, "id", lo=0).count() == 1
-    assert prune_chunks_stats(chunks, "id", hi=-45).count() == 1
-    assert prune_chunks_stats(chunks, "id", eq_value=-100).count() == 0
+    assert _kept(chunks, Comparison("id", ">=", 0)) == 1
+    assert _kept(chunks, Comparison("id", "<=", -45)) == 1
+    assert _kept(chunks, Comparison("id", "=", -100)) == 0
 
 
 def test_stats_pruning_doubles(spark):
     vs = [float(i) for i in range(9, 12)] + [float(i) for i in range(100, 103)]
     df = spark.createDataFrame([(v,) for v in vs], "v double").repartitionByRange(2, "v")
     chunks = encode_table(df, plan={})
-    assert prune_chunks_stats(chunks, "v", lo=50.0).count() == 1
-    assert prune_chunks_stats(chunks, "v", hi=12.5).count() == 1
+    assert _kept(chunks, Comparison("v", ">=", 50.0)) == 1
+    assert _kept(chunks, Comparison("v", "<=", 12.5)) == 1
 
 
 def test_pruned_point_lookup_end_to_end(spark, encoded):
@@ -103,3 +107,20 @@ def test_pruned_point_lookup_end_to_end(spark, encoded):
     assert len(got) == 1 and got[0].url == target
     total = chunks.select("part_id", "chunk_ord").distinct().count()
     assert keys.count() < total  # actually pruned something
+
+
+def test_pruned_point_lookup_string_probe_on_int_column(spark):
+    """A string probe on a bigint column must find what Spark's own
+    `id == '10'` finds: compared against the stat strings "2".."99" it
+    would order "2" > "10" and prune the only chunk."""
+    import pyspark.sql.types as T
+
+    df = spark.createDataFrame([(i,) for i in range(2, 100)], "id long").coalesce(1)
+    chunks = encode_table(df, plan={"id": {"bloom": True}}).cache()
+    assert chunks.select("part_id", "chunk_ord").distinct().count() == 1
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    rows, _keys = pruned_point_lookup(chunks, schema, "id", "10")
+    want = df.where(F.col("id") == F.lit("10")).collect()
+    assert len(want) == 1
+    assert rows.collect() == want
+    chunks.unpersist()
