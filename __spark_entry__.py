@@ -571,6 +571,7 @@ def q_orc_file_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/row_index.rs:235-329), evaluates per-10k-group stats + bloom
     (src/row_group_filter.rs:54-205,370-408), and seek-decodes ONLY the
     matching groups via the recorded stream positions."""
+    from orc_rust_spark.operators.predicate import Comparison
     from orc_rust_spark.sources.orc_file import orc_scan
 
     orc_path = _lineitem_bloom_orc(sf_dir)
@@ -580,7 +581,7 @@ def q_orc_file_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, orc_path,
         schema="l_orderkey long, l_partkey long, l_quantity double, "
                "l_returnflag string, l_shipdate timestamp_ntz",
-        predicate=("l_orderkey", probe, probe),
+        predicate=Comparison("l_orderkey", "=", probe),
     )
     return df.where(F.col("l_orderkey") == probe)
 
@@ -598,6 +599,7 @@ def q_orc_file_write_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    from orc_rust_spark.operators.predicate import Comparison
     from orc_rust_spark.sources.orc_file import orc_scan, write_orc
 
     orc_path = _interop_cache_path(sf_dir, "lineitem_ours_idx", ".orc")
@@ -615,7 +617,7 @@ def q_orc_file_write_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, orc_path,
         schema="l_orderkey long, l_partkey long, l_quantity double, "
                "l_returnflag string, l_shipdate timestamp_ntz",
-        predicate=("l_orderkey", probe, probe),
+        predicate=Comparison("l_orderkey", "=", probe),
     )
     return df.where(F.col("l_orderkey") == probe)
 
@@ -1303,13 +1305,8 @@ def q_pruned_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pruned_predicate_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite predicate AST (And/Or/IsNotNull) pruned scan
     (src/predicate.rs analog), aggregated so the result is small."""
-    from orc_rust_spark.operators.predicate import (
-        And,
-        Comparison,
-        IsNotNull,
-        Or,
-        pruned_scan,
-    )
+    from orc_rust_spark.operators.predicate import And, Comparison, IsNotNull, Or
+    from orc_rust_spark.operators.pruned_read import pruned_scan
 
     schema, chunks, probe = _lineitem_chunks(spark, sf_dir)
     pred = And(

@@ -352,10 +352,10 @@ def decode_table_arrow(
     dirs reuse task-local part_ids.
 
     ``pred``: decode only the row groups of each chunk that it might match
-    (predicate.rg_keep_for_chunk); every chunk with an index on a predicate
+    (pruned_read.rg_keep_for_chunk); every chunk with an index on a predicate
     column skips the rest. The caller still applies pred to the rows.
     """
-    from .predicate import rg_keep_for_chunk  # predicate imports this module
+    from .pruned_read import rg_keep_for_chunk  # pruned_read imports this module
 
     col_kinds = {f.name: f.dataType for f in schema.fields}
     arrow_schema = pa.schema(

@@ -164,6 +164,15 @@ def _bloomable(typ: pa.DataType) -> bool:
     )
 
 
+def _spark_float_range(vals: np.ndarray) -> tuple[str, str]:
+    """(min, max) stat strings of a non-empty float array in Spark's
+    order: ±inf count, and NaN sorts above every number, so a NaN makes
+    the max "nan" (and the min too when every value is NaN)."""
+    nums = vals[~np.isnan(vals)]
+    mn = repr(float(nums.min())) if nums.size else "nan"
+    return mn, repr(float(nums.max())) if nums.size == vals.size else "nan"
+
+
 def _encode_column_row_groups(name: str, arr: pa.Array, col_plan: dict, emit) -> None:
     """Row-group-indexed encode: the column is encoded per 10,000-row group
     (reference ROW_INDEX analog, src/row_index.rs:31-55) by re-invoking the
@@ -231,8 +240,8 @@ def _encode_column_row_groups(name: str, arr: pa.Array, col_plan: dict, emit) ->
             minv = str(min(int(m) for m in non_null_min))
             maxv = str(max(int(m) for m in non_null_max))
         elif floaty:
-            minv = repr(min(float(m) for m in non_null_min))
-            maxv = repr(max(float(m) for m in non_null_max))
+            minv = _spark_float_range(np.array(non_null_min, dtype=float))[0]
+            maxv = _spark_float_range(np.array(non_null_max, dtype=float))[1]
         else:
             minv, maxv = min(non_null_min), max(non_null_max)
     else:
@@ -401,9 +410,8 @@ def _encode_column(name: str, arr: pa.Array, col_plan: dict, emit) -> None:
         codec = "float_plain"
         streams = [(ct.DATA, encode_float(np.ascontiguousarray(vals)))]
         raw = n * vals.dtype.itemsize
-        finite = vals[np.isfinite(vals)] if vals.size else vals
-        if finite.size:  # repr() round-trips exactly through try_cast double
-            minv, maxv = repr(float(finite.min())), repr(float(finite.max()))
+        if vals.size:  # repr() round-trips exactly through try_cast double
+            minv, maxv = _spark_float_range(vals)
     elif pa.types.is_boolean(typ):
         vals = np.asarray(dense)
         codec = "boolean_rle"

@@ -7,11 +7,13 @@ The most Spark-native packaging of sources/orc_file.py: after
 
 Catalyst plans the scan like any other source — column pruning and
 filter pushdown included. ``pushFilters`` receives the AND-list of
-predicates, keeps the single-column comparisons it can evaluate against
-ORC statistics, and:
+predicates and maps each single-column one to a node of the predicate
+evaluator (operators.predicate); the AND of those nodes is then judged
+at three granularities:
 
-- ``partitions()`` emits one InputPartition per stripe SURVIVING
-  stripe-statistics pruning (the reference's byte-range split model,
+- ``partitions()`` drops files whose hive partition values rule it out,
+  and emits one InputPartition per stripe SURVIVING stripe-statistics
+  pruning (the reference's byte-range split model,
   src/arrow_reader.rs:358-372 + stripe stats pushdown),
 - ``read()`` decodes each stripe through this engine's codecs, skipping
   the 10k row groups whose ROW_INDEX stats / bloom filter exclude the
@@ -34,20 +36,14 @@ import re
 
 from dataclasses import dataclass
 
+from pyspark.sql import datasource as sds
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
     InputPartition,
-    LessThan,
-    LessThanOrEqual,
-    StringStartsWith,
     WriterCommitMessage,
 )
 
@@ -67,8 +63,32 @@ def _prefix_upper_bound(prefix: str) -> str | None:
 
 from . import fsio
 from . import orc_file as of
+from ..operators import predicate as P
+
+_FILTER_OP = {sds.EqualTo: "=", sds.GreaterThan: ">", sds.GreaterThanOrEqual: ">=",
+              sds.LessThan: "<", sds.LessThanOrEqual: "<="}
 
 
+def _filter_node(f) -> P.Predicate | None:
+    """One pushed Spark filter -> one predicate node, or None for a
+    filter the evaluator does not take (Not, EqualNullSafe, a nested
+    column). A prefix is the range [prefix, _prefix_upper_bound)."""
+    col = getattr(f, "attribute", ())
+    if len(col) != 1:
+        return None
+    name, val = col[0], getattr(f, "value", None)
+    if isinstance(f, sds.IsNull):
+        return P.IsNull(name)
+    if isinstance(f, sds.IsNotNull):
+        return P.IsNotNull(name)
+    if isinstance(f, sds.In):
+        return P.Or(*(P.Comparison(name, "=", v) for v in val))
+    if isinstance(f, sds.StringStartsWith):
+        ub = _prefix_upper_bound(val)
+        lo = P.Comparison(name, ">=", val)
+        return lo if ub is None else P.And(lo, P.Comparison(name, "<", ub))
+    op = _FILTER_OP.get(type(f))
+    return None if op is None else P.Comparison(name, op, val)
 
 
 def _option_fs(options: dict):
@@ -303,34 +323,14 @@ def _discover_partitions(root: str, fs,
     return paths, pvals, ddl_by_col
 
 
-def _part_keep(typed_vals: dict, bounds: dict, in_sets: dict,
-               null_preds: dict) -> bool:
-    """EXACT file-level partition pruning: a partition column is constant
-    per file, so a pushed probe it fails eliminates the whole file (not
-    advisory — but Spark still re-applies every filter, so a too-keep is
-    merely unpruned work). Type-mismatched comparisons keep the file."""
-    for col, v in typed_vals.items():
-        try:
-            if col in null_preds:
-                want_not_null = null_preds[col]
-                if want_not_null and v is None:
-                    return False
-                if not want_not_null and v is not None:
-                    return False
-            if col in bounds:
-                lo, hi = bounds[col]
-                if v is None and (lo is not None or hi is not None):
-                    return False  # NULL fails every range/eq probe
-                if lo is not None and v < lo:
-                    return False
-                if hi is not None and v > hi:
-                    return False
-            if col in in_sets:
-                if v is None or v not in in_sets[col]:
-                    return False
-        except TypeError:
-            continue  # incomparable probe value: advisory keep
-    return True
+def _partition_summaries(pvals: dict) -> dict:
+    """Adapter for the predicate evaluator: a file's hive partition
+    values, each constant over the file -> one-unit summaries with
+    min = max = value, NULL being all-null. Pruning on them is exact (but
+    Spark still re-applies every filter)."""
+    return {c: [P.Summary(v, v, None, False) if v is not None
+                else P.Summary(n_values=0, has_null=True)]
+            for c, v in pvals.items()}
 
 
 class OrcRustReader(DataSourceReader):
@@ -456,80 +456,17 @@ class OrcRustReader(DataSourceReader):
         # (r7: shared rule with orc_scan's schema inference)
         of.validate_consistent_types(self.metas, self.columns, what="orcx",
                                      allow_widening=self.evolve)
-        # (column, lo, hi) bounds + IN-list value sets + null predicates
-        # from pushed filters
-        self.bounds: dict[str, list] = {}
-        self.in_sets: dict[str, list] = {}
-        self.null_preds: dict[str, bool] = {}  # col -> not_null flag
+        # one predicate node per pushed filter the evaluator takes
+        self.pushed: list[P.Predicate] = []
 
     def pushFilters(self, filters):
-        import datetime as _dt
-        from decimal import Decimal as _Dec
-
-        from pyspark.sql.datasource import IsNotNull, IsNull
-
         for f in filters:
-            col = getattr(f, "attribute", None)
-            val = getattr(f, "value", None)
-            if col is not None and len(col) == 1:
-                name = col[0]
-                if isinstance(f, IsNotNull):
-                    self.null_preds[name] = True
-                elif isinstance(f, IsNull):
-                    self.null_preds[name] = False
-                # date/datetime probes prune via dateStatistics /
-                # timestampStatistics (UTC-millis); Decimal probes via
-                # decimalStatistics strings
-                if isinstance(val, (int, float, str, _dt.date, _Dec)):
-                    b = self.bounds.setdefault(name, [None, None])
-                    if isinstance(f, EqualTo):
-                        b[0] = b[1] = val
-                    elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                        b[0] = val if b[0] is None else max(b[0], val)
-                    elif isinstance(f, (LessThan, LessThanOrEqual)):
-                        b[1] = val if b[1] is None else min(b[1], val)
-                    elif isinstance(f, StringStartsWith):
-                        # startswith(p) ⇒ p <= col < next(p): a sound
-                        # min/max range for code-point-ordered stats
-                        b[0] = val if b[0] is None else max(b[0], val)
-                        ub = _prefix_upper_bound(val)
-                        if ub is not None:
-                            b[1] = ub if b[1] is None else min(b[1], ub)
-                elif (isinstance(f, In) and isinstance(val, tuple) and val
-                      and all(isinstance(v, (int, float, str)) for v in val)):
-                    # IN-list = union of equality probes: stripes/groups/
-                    # blooms keep anything that may match ANY listed value
-                    self.in_sets[name] = sorted(set(val))
+            node = _filter_node(f)
+            if node is not None:
+                self.pushed.append(node)
             # our stats pruning is three-valued/advisory: Spark must still
             # apply every filter exactly
             yield f
-
-    def _predicates(self) -> list[dict]:
-        """EVERY pushed single-column probe as an AND-list — the reader
-        intersects per-column row-group keeps, so `a = 1 AND b > 5`
-        prunes on BOTH indexes, not just the most selective one."""
-        preds: dict[str, dict] = {}
-        extra: list[dict] = []
-        for col, (lo, hi) in self.bounds.items():
-            if lo is not None and lo == hi:
-                preds[col] = dict(column=col, eq=[lo])
-            elif lo is not None or hi is not None:
-                preds[col] = dict(column=col, lo=lo, hi=hi)
-        for col, vals in self.in_sets.items():
-            if col not in preds:
-                preds[col] = dict(column=col, eq=vals)
-            elif "eq" not in preds[col]:
-                # col IN (...) AND col >= x: keep BOTH probes as separate
-                # AND-list entries — the IN-set prunes via stats AND bloom
-                # while a wide range bound alone prunes almost nothing
-                # (code-review r6: the range is not 'tighter' than an eq)
-                extra.append(dict(column=col, eq=vals))
-        for col, flag in self.null_preds.items():
-            if col in preds:
-                preds[col]["not_null"] = flag
-            else:
-                preds[col] = dict(column=col, not_null=flag)
-        return list(preds.values()) + extra
 
     def __getstate__(self):
         # the executor-side half of read() needs the pushed predicates and
@@ -542,7 +479,7 @@ class OrcRustReader(DataSourceReader):
         return state            # values; keep the task closure O(1)
 
     def partitions(self):
-        preds = self._predicates()
+        pred = P.And(*self.pushed)
         if self.row_ranges is not None and len(self.metas) != 1:
             raise ValueError(
                 f"orcx row_ranges requires a single ORC file (got "
@@ -550,24 +487,12 @@ class OrcRustReader(DataSourceReader):
         parts = []
         for path, meta in self.metas.items():
             pvals = self._pvals.get(path)
-            if pvals and not _part_keep(pvals, self.bounds, self.in_sets,
-                                        self.null_preds):
+            if pvals and not pred.keep(_partition_summaries(pvals), 1):
                 continue  # hive partition pruning: the whole file is out
-            idx = set(range(len(meta.stripes)))
-            have = set(meta.types[0].field_names)
-            for p in preds:  # stripe keeps intersect across columns too
-                if p["column"] not in have:
-                    # evolution: a file predating the predicate column
-                    # cannot prune on it — its rows surface as nulls and
-                    # Spark's residual filter decides (orc_scan's guard)
-                    continue
-                if p.get("eq") is not None:
-                    idx &= set(of.prune_stripes(meta, p["column"],
-                                                values=p["eq"]))
-                elif p.get("lo") is not None or p.get("hi") is not None:
-                    idx &= set(of.prune_stripes(meta, p["column"],
-                                                p.get("lo"), p.get("hi")))
-            idx = sorted(idx)
+            # a file predating a predicate column (evolution) has no stats
+            # for it, so it cannot prune on it — its rows surface as nulls
+            # and Spark's residual filter decides
+            idx = of.keep_stripes(meta, pred)
             # row ranges: clip to each stripe's span; non-intersecting
             # stripes are never scheduled (one shared algebra with
             # orc_scan — of.clip_ranges_to_stripes)
@@ -599,24 +524,16 @@ class OrcRustReader(DataSourceReader):
                 f"{part.path} disappeared between planning and read; set "
                 ".option('ignore_missing_files', 'true') to skip such "
                 "files") from None
-        preds = self._predicates()
-        # a probe on a column this file doesn't PHYSICALLY carry (an
-        # evolution-added column, or a hive partition column living in
-        # the path) cannot drive row-group pruning — sound in the default
-        # case too, where every probe column exists
-        have = set(meta.types[0].field_names)
-        preds = [p for p in preds if p["column"] in have]
-        if preds or part.ranges is not None:
-            # the projection reaches the pruned decode path too: unprojected
-            # columns of kept groups are never seek-decoded (VERDICT r3
-            # missing #1); per-column keeps INTERSECT across the AND-list,
-            # and caller row ranges AND in through the same algebra
-            tbl, _, _ = of.decode_stripe_pruned(
-                body, footer_raw, meta, part.rows, columns=self.columns,
-                predicates=preds, row_ranges=part.ranges)
-        else:
-            tbl = of.decode_stripe(body, footer_raw, meta, part.rows,
-                                   columns=self.columns)
+        # the projection reaches the pruned decode path too: unprojected
+        # columns of kept groups are never seek-decoded (VERDICT r3
+        # missing #1). A probe on a column this file doesn't PHYSICALLY
+        # carry (an evolution-added column, or a hive partition column
+        # living in the path) has no index, so it keeps every group;
+        # caller row ranges AND in through the same algebra
+        tbl, _, _ = of.decode_stripe_pruned(
+            body, footer_raw, meta, part.rows,
+            pred=P.And(*self.pushed) if self.pushed else None,
+            columns=self.columns, row_ranges=part.ranges)
         if part.pvals:
             # hive partition values -> constant columns (O(1) per stripe:
             # pa.nulls/pa.repeat build run-length validity, not n cells)

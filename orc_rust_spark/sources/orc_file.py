@@ -39,6 +39,7 @@ from ..codecs.rle_v1 import decode_rlev1
 from ..codecs.rle_v2 import decode_rlev2
 from ..codecs.timestamp_split import combine_timestamp_ns, combine_timestamp_us
 from ..codecs.util import CorruptStream
+from ..operators.predicate import And, Comparison, Predicate, Summary
 
 MAGIC = b"ORC"
 
@@ -1409,105 +1410,51 @@ def _decode_column_group(
     return _respace(dense, not_null)
 
 
-def _bloom_probe_ok(col_kind: int, eq) -> bool:
-    """Only probe the bloom filter when the probe value's hash family
-    matches what the writer fed it (i64 for integer columns, utf8 bytes
-    for string columns) — a mismatched probe false-negatives and would
-    WRONGLY prune (three-valued safety)."""
-    if col_kind in (K_BYTE, K_SHORT, K_INT, K_LONG):
-        return isinstance(eq, int)
-    if col_kind in (K_STRING, K_VARCHAR, K_CHAR, K_BINARY):
-        return isinstance(eq, (str, bytes))
-    return False
+_INT_KINDS = (K_BYTE, K_SHORT, K_INT, K_LONG)
+_BYTES_KINDS = (K_STRING, K_VARCHAR, K_CHAR, K_BINARY)
 
 
-def _stats_comparable(mn, bound) -> bool:
-    """Probe/stat TYPE agreement gate: comparisons only happen within one
-    family (str, datetime, date, decimal, numeric) — anything else keeps
-    the group/stripe (three-valued safety; a raw-int probe on a date
-    column, say, must never prune). Decimal stats additionally accept
-    int probes (exact comparison, no float rounding)."""
-    import datetime as _dt
-    import decimal as _decimal
-
-    if isinstance(mn, bool):  # before int: bool is an int subclass
-        return isinstance(bound, bool)
-    if isinstance(mn, str):
-        return isinstance(bound, str)
-    if isinstance(mn, _dt.datetime):
-        # naive-vs-aware comparison raises TypeError; our stats are naive,
-        # so an aware probe is simply not comparable (keep)
-        return (isinstance(bound, _dt.datetime)
-                and (mn.tzinfo is None) == (bound.tzinfo is None))
-    if isinstance(mn, _dt.date):
-        return isinstance(bound, _dt.date) and not isinstance(bound, _dt.datetime)
-    if isinstance(mn, _decimal.Decimal):
-        return (isinstance(bound, _decimal.Decimal)
-                or (isinstance(bound, int) and not isinstance(bound, bool)))
-    if isinstance(mn, (int, float)) and not isinstance(mn, bool):
-        return (isinstance(bound, (int, float))
-                and not isinstance(bound, bool))
-    return False
-
-
-def _group_may_match(stats, bf, col_kind: int, lo, hi, eq) -> bool:
-    """Three-valued per-group test: stats range check, then (for an
-    equality probe) the bloom filter — missing/mismatched stats keep."""
-    ok = True
-    if stats is not None:
-        mn, mx = stats
-        # each bound is checked for comparability INDEPENDENTLY: a mixed
-        # lo/hi pair (int lo, str hi) previously passed the single check
-        # and then raised TypeError mid-scan instead of keeping the group
-        # (code-review r6; the contract is three-valued: mismatches keep)
-        if lo is not None and _stats_comparable(mx, lo) and mx < lo:
-            ok = False
-        if ok and hi is not None and _stats_comparable(mn, hi) and mn > hi:
-            ok = False
-    if ok and eq is not None and bf is not None and _bloom_probe_ok(col_kind, eq):
-        if isinstance(eq, int):
-            ok = bf.might_contain_i64(eq)
-        else:
-            probe = eq.encode() if isinstance(eq, str) else eq
-            ok = bf.might_contain_bytes(probe)
-    return ok
+def _row_group_summaries(meta: OrcMeta, streams: dict, columns, ri_entries) -> dict:
+    """Adapter for the predicate evaluator: the ROW_INDEX entries (typed
+    min/max, non-null count, hasNull) plus blooms of the named root
+    columns -> {column: [Summary per row group]}. A column without an
+    index has no summaries, so its groups are kept."""
+    root = meta.types[0]
+    out = {}
+    for name in columns:
+        if name not in root.field_names:
+            continue
+        cid = root.subtypes[root.field_names.index(name)]
+        entries = ri_entries(cid)
+        if entries is None:
+            continue
+        kind = meta.types[cid].kind
+        bl_raw = streams.get((cid, S_BLOOM_FILTER_UTF8))
+        if bl_raw is None and kind in _INT_KINDS:
+            # pre-ORC-101 legacy blooms hashed strings in the WRITER's
+            # default charset — only integer probes are charset-
+            # independent, so the deprecated stream is trusted for
+            # integer columns alone (a mismatched string probe would
+            # false-negative and WRONGLY prune)
+            bl_raw = streams.get((cid, S_BLOOM_FILTER))
+        blooms = (_parse_bloom_index(blockc.decompress_stream(bl_raw, meta.compression))
+                  if bl_raw is not None else [])
+        key = int if kind in _INT_KINDS else str if kind in _BYTES_KINDS else None
+        out[name] = [
+            Summary(*(stats or (None, None)), n_values, has_null,
+                    (blooms[g], key) if g < len(blooms) and blooms[g] is not None else None)
+            for g, (_, stats, (n_values, has_null)) in enumerate(entries)]
+    return out
 
 
-def _rg_keep_for_stripe(
-    entries: list, blooms: list | None, n_rows: int, stride: int,
-    eq=None, lo=None, hi=None, col_kind: int = -1,
-    not_null: bool | None = None,
-) -> list[int]:
-    """Row groups whose index stats (and bloom, for eq) may match — the
-    reference's evaluate_row_group_predicate (src/row_group_filter.rs:54-205,
-    bloom :370-408). Three-valued: missing/mismatched stats keep. ``eq``
-    may be a list/set of values (an IN-list probe): a group is kept if ANY
-    value may match. ``not_null`` prunes on the null statistics:
-    True (an IS NOT NULL probe) drops groups with zero non-null values,
-    False (IS NULL) drops groups whose stats say hasNull is false."""
-    eqs = None
-    if eq is not None:
-        eqs = (sorted(eq) if isinstance(eq, (set, frozenset))
-               else list(eq) if isinstance(eq, (list, tuple)) else [eq])
-    n_groups = (n_rows + stride - 1) // stride
-    keep = []
-    for g in range(min(n_groups, len(entries))):
-        stats = entries[g][1]
-        bf = blooms[g] if (blooms and g < len(blooms)) else None
-        if eqs is not None:
-            ok = any(_group_may_match(stats, bf, col_kind, v, v, v) for v in eqs)
-        else:
-            ok = _group_may_match(stats, None, col_kind, lo, hi, None)
-        if ok and not_null is not None and len(entries[g]) > 2:
-            n_values, has_null = entries[g][2]
-            if not_null is True and n_values == 0:
-                ok = False  # every value in the group is null
-            elif not_null is False and has_null is False:
-                ok = False  # stats guarantee the group has no nulls
-        if ok:
-            keep.append(g)
-    keep.extend(range(len(entries), n_groups))  # entries missing: keep
-    return keep
+def keep_stripes(meta: OrcMeta, pred: Predicate) -> list[int]:
+    """Stripe indexes ``pred`` might match, judged by the Metadata stripe
+    statistics (min/max) — the reference's stripe-level predicate
+    pushdown. Stripes or columns without stats are kept."""
+    root, cols = meta.types[0], pred.columns()
+    summaries = {name: [Summary(*st[cid]) if cid in st else None for st in meta.stripe_stats]
+                 for name, cid in zip(root.field_names, root.subtypes) if name in cols}
+    return sorted(pred.keep(summaries, len(meta.stripes)))
 
 
 def normalize_row_ranges(ranges) -> list[tuple[int, int]]:
@@ -1577,10 +1524,7 @@ def _range_mask(groups, stride: int, n_rows: int, ranges) -> np.ndarray:
 
 def decode_stripe_pruned(
     buf: bytes, footer_raw: bytes, meta: OrcMeta, n_rows: int,
-    column: str | None = None, eq=None, lo=None, hi=None,
-    columns: list[str] | None = None,
-    not_null: bool | None = None,
-    predicates: list[dict] | None = None,
+    pred: Predicate | None = None, columns: list[str] | None = None,
     row_ranges: list[tuple[int, int]] | None = None,
 ) -> tuple[pa.Table, int, int]:
     """Corruption-guarded entry for the predicate/seek decode path — same
@@ -1589,57 +1533,42 @@ def decode_stripe_pruned(
     Semantics documented on the impl below."""
     return _corrupt_guarded(
         _decode_stripe_pruned_impl, buf, footer_raw, meta, n_rows,
-        column=column, eq=eq, lo=lo, hi=hi, columns=columns,
-        not_null=not_null, predicates=predicates, row_ranges=row_ranges)
+        pred=pred, columns=columns, row_ranges=row_ranges)
 
 
 def _decode_stripe_pruned_impl(
     buf: bytes, footer_raw: bytes, meta: OrcMeta, n_rows: int,
-    column: str | None = None, eq=None, lo=None, hi=None,
-    columns: list[str] | None = None,
-    not_null: bool | None = None,
-    predicates: list[dict] | None = None,
+    pred: Predicate | None = None, columns: list[str] | None = None,
     row_ranges: list[tuple[int, int]] | None = None,
 ) -> tuple[pa.Table, int, int]:
-    """Decode only the row groups of this stripe whose ROW_INDEX stats /
-    bloom filter may satisfy the predicate on ``column`` — and only the
+    """Decode only the row groups of this stripe that the predicate
+    ``pred`` might match, judged by the predicate evaluator over each
+    predicate column's ROW_INDEX stats and bloom filter — and only the
     ``columns`` projection (reference semantics: unprojected streams are
-    never touched, src/stripe.rs:154-165 / src/projection.rs:37-69; the
+    never touched, src/stripe.rs:154-165 / src/projection.rs:37-69; a
     predicate column's INDEX drives pruning even when unprojected).
-
-    ``eq`` may be a single value or an IN-list of values. ``predicates``
-    generalizes to an AND-list of per-column probes
-    ``{"column", "eq", "lo", "hi", "not_null"}`` whose per-column keep
-    lists INTERSECT (the RowSelection::and_then composition,
-    src/row_selection.rs) — columns without a usable index simply don't
-    contribute.
+    Predicate columns without an index, or absent from this file, keep
+    every group.
 
     ``row_ranges`` (r6, VERDICT r5 next #7 — the caller-supplied
     ``RowSelection`` analog, src/row_selection.rs:32-260): STRIPE-LOCAL
     half-open [start, stop) row ranges, pre-normalized
     (normalize_row_ranges). They contribute a group keep-set that
-    INTERSECTS the predicate keep-sets via the same AND algebra, and —
-    unlike stats pruning, which is advisory — the returned rows are
-    sliced EXACTLY to the ranges on every path (seek and full-decode
-    fallback alike).
+    INTERSECTS the predicate's keep-set, and — unlike stats pruning,
+    which is advisory — the returned rows are sliced EXACTLY to the
+    ranges on every path (seek and full-decode fallback alike).
 
     -> (table of kept groups' rows, groups_decoded, groups_total). The
     caller applies the residual filter. Falls back to full decode (all
-    groups "decoded") only when no predicate column has a usable index,
-    the index is missing/truncated, or a projected column's type kind is
-    unknown (every known kind, nested and union included, seek-decodes),
-    always respecting the projection.
+    groups "decoded") when nothing can be skipped, the index is
+    missing/truncated, or a projected column's type kind is unknown
+    (every known kind, nested and union included, seek-decodes), always
+    respecting the projection.
     """
-    stream_list, encodings, tz = _read_stripe_footer(footer_raw, meta.compression)
-    streams: dict[tuple[int, int], bytes] = {}
-    pos = 0
-    for col, kind, length in stream_list:
-        streams[(col, kind)] = buf[pos: pos + length]
-        pos += length
-    root = meta.types[0]
+    # (stride is always >= 1: a legacy stride-0 footer maps to the 10k
+    # default, so no stride-0 branch exists here)
     stride = int(meta.row_index_stride or 10_000)
     n_groups = (n_rows + stride - 1) // stride
-    proj = [n for n in root.field_names if columns is None or n in columns]
 
     def _slice_exact(tbl: pa.Table, groups) -> pa.Table:
         """Exact row-range slice over the concatenated rows of ``groups``
@@ -1654,11 +1583,16 @@ def _decode_stripe_pruned_impl(
         tbl = decode_stripe(buf, footer_raw, meta, n_rows, columns=columns)
         return _slice_exact(tbl, range(n_groups)), n_groups, n_groups
 
-    if predicates is None:
-        predicates = ([dict(column=column, eq=eq, lo=lo, hi=hi,
-                            not_null=not_null)] if column is not None else [])
-    # (stride is always >= 1: a legacy stride-0 footer maps to the 10k
-    # default above, so no stride-0 branch exists here)
+    if pred is None and row_ranges is None:
+        return full()
+    stream_list, encodings, tz = _read_stripe_footer(footer_raw, meta.compression)
+    streams: dict[tuple[int, int], bytes] = {}
+    pos = 0
+    for col, kind, length in stream_list:
+        streams[(col, kind)] = buf[pos: pos + length]
+        pos += length
+    root = meta.types[0]
+    proj = [n for n in root.field_names if columns is None or n in columns]
 
     parsed_ri: dict[int, list] = {}  # decompress+parse each index ONCE
     # (a predicate column that is also projected reused to pay twice —
@@ -1671,39 +1605,17 @@ def _decode_stripe_pruned_impl(
                 blockc.decompress_stream(raw, meta.compression))
         return parsed_ri[cid]
 
-    keep_sets: list[set[int]] = []
-    for p in predicates:
-        try:
-            col_id = root.subtypes[root.field_names.index(p["column"])]
-        except ValueError:
-            continue
-        entries = _ri_entries(col_id)
-        if entries is None:
-            continue
-        col_kind = meta.types[col_id].kind
-        bl_raw = streams.get((col_id, S_BLOOM_FILTER_UTF8))
-        if bl_raw is None and col_kind in (K_BYTE, K_SHORT, K_INT, K_LONG):
-            # pre-ORC-101 legacy blooms hashed strings in the WRITER's
-            # default charset — only integer probes are charset-
-            # independent, so the deprecated stream is trusted for
-            # integer columns alone (a mismatched string probe would
-            # false-negative and WRONGLY prune)
-            bl_raw = streams.get((col_id, S_BLOOM_FILTER))
-        blooms = (_parse_bloom_index(
-            blockc.decompress_stream(bl_raw, meta.compression))
-            if bl_raw is not None else None)
-        keep_sets.append(set(_rg_keep_for_stripe(
-            entries, blooms, n_rows, stride, eq=p.get("eq"), lo=p.get("lo"),
-            hi=p.get("hi"), col_kind=col_kind, not_null=p.get("not_null"))))
+    keep = set(range(n_groups))
+    if pred is not None:
+        keep &= pred.keep(_row_group_summaries(
+            meta, streams, pred.columns(), _ri_entries), n_groups)
     if row_ranges is not None:
-        keep_sets.append({
+        keep &= {
             g for g in range(n_groups)
             if any(lo_ < min((g + 1) * stride, n_rows) and hi_ > g * stride
                    for lo_, hi_ in row_ranges)
-        })
-    if not keep_sets:
-        return full()
-    keep = sorted(set.intersection(*keep_sets))
+        }
+    keep = sorted(keep)
     if len(keep) >= n_groups:
         return full()
     if not keep:
@@ -2005,8 +1917,6 @@ def _group_min_max(kind: int, g_dense: pa.Array):
     """Full-precision per-group (min, max) for the stat families we emit —
     never truncated (a truncated max below the true max would WRONGLY
     prune an equality probe on it)."""
-    import math as _math
-
     import pyarrow.compute as pc
 
     if not len(g_dense):
@@ -2015,11 +1925,13 @@ def _group_min_max(kind: int, g_dense: pa.Array):
         mm = pc.min_max(g_dense)
         return int(mm["min"].as_py()), int(mm["max"].as_py())
     if kind in (K_FLOAT, K_DOUBLE):
-        mm = pc.min_max(g_dense)
-        mn, mx = mm["min"].as_py(), mm["max"].as_py()
-        if mn is None or mx is None or _math.isnan(mn) or _math.isnan(mx):
+        # min_max skips NaN, but Spark orders NaN above every number: a
+        # group holding NaN has no upper bound, and these double stats
+        # carry min and max as a pair, so it gets none
+        if pc.any(pc.is_nan(g_dense)).as_py():
             return None, None
-        return float(mn), float(mx)
+        mm = pc.min_max(g_dense)
+        return float(mm["min"].as_py()), float(mm["max"].as_py())
     if kind in (K_STRING, K_VARCHAR, K_CHAR):
         mm = pc.min_max(g_dense.cast(pa.large_string()))
         return mm["min"].as_py(), mm["max"].as_py()
@@ -2956,45 +2868,11 @@ def write_orc(table: pa.Table, path: str, compression: str = "zlib",
     w.close()
 
 
-def prune_stripes(meta: OrcMeta, column: str, lo=None, hi=None,
-                  values: list | None = None) -> list[int]:
-    """Stripe indexes whose Metadata stats may intersect [lo, hi] — or,
-    for an IN-list probe, contain ANY of ``values`` — the reference's
-    stripe-level predicate pushdown over StripeStatistics (three-valued:
-    stripes without stats are kept)."""
-    root = meta.types[0]
-    try:
-        col_id = root.subtypes[root.field_names.index(column)]
-    except ValueError:
-        return list(range(len(meta.stripes)))
-
-    def may_match(mn, mx, lo_, hi_) -> bool:
-        # three-valued safety for probe/stat TYPE confusion (int probe on a
-        # string column would raise or misprune): mismatch keeps the
-        # stripe. Each bound is gated INDEPENDENTLY — a mixed lo/hi pair
-        # must keep, not raise (code-review r6, same fix as
-        # _group_may_match)
-        if lo_ is not None and _stats_comparable(mx, lo_) and mx < lo_:
-            return False
-        if hi_ is not None and _stats_comparable(mn, hi_) and mn > hi_:
-            return False
-        return True
-
-    keep = []
-    for i in range(len(meta.stripes)):
-        stats = meta.stripe_stats[i] if i < len(meta.stripe_stats) else {}
-        mm = stats.get(col_id)
-        if mm is None:
-            keep.append(i)
-            continue
-        mn, mx = mm
-        if values is not None:
-            ok = any(may_match(mn, mx, v, v) for v in values)
-        else:
-            ok = may_match(mn, mx, lo, hi)
-        if ok:
-            keep.append(i)
-    return keep
+def prune_stripes(meta: OrcMeta, column: str, lo=None, hi=None) -> list[int]:
+    """Stripe indexes whose Metadata stats may intersect [lo, hi] (either
+    bound may be None): ``column >= lo AND column <= hi`` on keep_stripes."""
+    return keep_stripes(meta, And(*(
+        Comparison(column, op, v) for op, v in ((">=", lo), ("<=", hi)) if v is not None)))
 
 
 def orc_scan(spark, path: str, schema=None, predicate=None,
@@ -3017,11 +2895,12 @@ def orc_scan(spark, path: str, schema=None, predicate=None,
     constant in file count (same model as the orcx DataSource reader and
     its streaming variant).
 
-    ``predicate``: optional (column, lo, hi) — pushdown happens at TWO
-    granularities, mirroring the reference: stripes whose Metadata
-    statistics exclude the range are never scheduled, and inside each
-    surviving stripe only the 10k-row groups whose ROW_INDEX stats (and
-    bloom filter, when lo == hi) may match are seek-decoded
+    ``predicate``: optional ``operators.predicate.Predicate`` tree,
+    pushed down at TWO granularities through the predicate evaluator,
+    mirroring the reference: stripes whose Metadata statistics rule it
+    out are never scheduled, and inside each surviving stripe only the
+    10k-row groups whose ROW_INDEX stats (and bloom filter, for an
+    equality) it might match are seek-decoded
     (src/row_group_filter.rs:54-205,370-408). The residual filter still
     must be applied by the caller.
 
@@ -3114,16 +2993,11 @@ def orc_scan(spark, path: str, schema=None, predicate=None,
         row_ranges = normalize_row_ranges(row_ranges)
     stripes = []
     for p, meta in metas.items():
-        # a file that predates the predicate column cannot prune on it
-        # (its rows surface as nulls; the caller's residual filter
-        # decides) — only reachable with missing_as_null, since the
-        # default contract requires the column everywhere
-        has_pred_col = (predicate is not None
-                        and predicate[0] in meta.types[0].field_names)
-        idx = (
-            prune_stripes(meta, predicate[0], predicate[1], predicate[2])
-            if has_pred_col else range(len(meta.stripes))
-        )
+        # a file that predates a predicate column has no stats for it, so
+        # it cannot prune on it (its rows surface as nulls; the caller's
+        # residual filter decides)
+        idx = (keep_stripes(meta, predicate) if predicate is not None
+               else range(len(meta.stripes)))
         # stripe-local ranges: file-coordinate ranges clipped to each
         # stripe's [base, base+rows) span; stripes with none are skipped
         local_ranges: dict[int, list] = {}
@@ -3202,23 +3076,9 @@ def orc_scan(spark, path: str, schema=None, predicate=None,
                     m = meta_cache[cur["path"]] = _pickle.loads(cur["meta"])
                 ranges = (_pickle.loads(cur["ranges"])
                           if cur["ranges"] is not None else None)
-                # evolution: a file without the predicate column cannot
-                # group-prune on it (mirrors the driver's stripe guard)
-                pred = predicate
-                if (pred is not None
-                        and pred[0] not in m.types[0].field_names):
-                    pred = None
-                if pred is not None or ranges is not None:
-                    col, lo, hi = pred or (None, None, None)
-                    eq = lo if (lo is not None and lo == hi) else None
-                    tbl, _, _ = decode_stripe_pruned(
-                        body, footer_raw, m, cur["rows"], col,
-                        eq=eq, lo=None if eq is not None else lo,
-                        hi=None if eq is not None else hi, columns=columns,
-                        row_ranges=ranges)
-                else:
-                    tbl = decode_stripe(body, footer_raw, m, cur["rows"],
-                                        columns=columns)
+                tbl, _, _ = decode_stripe_pruned(
+                    body, footer_raw, m, cur["rows"], pred=predicate,
+                    columns=columns, row_ranges=ranges)
                 if target_arrow is not None:
                     # conform BY NAME to the declared schema: typed nulls
                     # for columns this file predates, schema column order
@@ -3236,17 +3096,13 @@ def orc_point_lookup(path: str, column: str, value,
     group counts make the pruning observable (reference integration tests
     assert exact row counts after bloom pruning, tests/integration/main.rs
     :374-488)."""
-    import datetime as _dt
-    import decimal as _decimal
-
     import pyarrow.compute as pc
 
     if filesystem is None:
         filesystem, path = fsio.resolve(path)
     meta = read_metadata(path, filesystem=filesystem)
-    lo = hi = (value if isinstance(
-        value, (int, float, str, _dt.date, _decimal.Decimal)) else None)
-    keep = prune_stripes(meta, column, lo, hi)
+    pred = Comparison(column, "=", value)
+    keep = keep_stripes(meta, pred)
     parts, decoded, total = [], 0, 0
     with fsio.open_input(path, filesystem) as fh:
         for i, st in enumerate(meta.stripes):
@@ -3259,7 +3115,7 @@ def orc_point_lookup(path: str, column: str, value,
             body = fh.read(st.index_length + st.data_length)
             footer_raw = fh.read(st.footer_length)
             tbl, kept, _ = decode_stripe_pruned(
-                body, footer_raw, meta, st.number_of_rows, column, eq=value)
+                body, footer_raw, meta, st.number_of_rows, pred=pred)
             decoded += kept
             if tbl.num_rows:
                 try:

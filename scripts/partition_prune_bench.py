@@ -33,6 +33,7 @@ REPS = int(os.environ.get("PRUNE_REPS", "3"))
 
 def main() -> None:
     from pyspark.sql import functions as F
+    from pyspark.sql.datasource import EqualTo
 
     from orc_rust_spark.session import get_spark
     from orc_rust_spark.sources.datasource import (
@@ -55,7 +56,7 @@ def main() -> None:
     r = OrcRustReader({"path": out})
     full_stripes = len([p for p in r.partitions() if p.offset >= 0])
     r2 = OrcRustReader({"path": out})
-    r2.bounds["lang"] = ["de", "de"]
+    list(r2.pushFilters([EqualTo(("lang",), "de")]))
     pruned_stripes = len([p for p in r2.partitions() if p.offset >= 0])
 
     def timed(pruned: bool) -> float:

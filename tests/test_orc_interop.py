@@ -13,6 +13,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as hyp_st
 
+from orc_rust_spark.operators.predicate import And, Comparison, IsNotNull, IsNull, Or
 from orc_rust_spark.sources.orc_file import orc_to_table, read_metadata
 
 
@@ -153,7 +154,7 @@ def test_orc_scan_with_predicate(spark, tmp_path):
     path = str(tmp_path / "pred.orc")
     paorc.write_table(tbl, path, compression="ZLIB", stripe_size=512 * 1024)
     df = orc_scan(spark, path, schema="id long, pay string",
-                  predicate=("id", n - 100, None))
+                  predicate=Comparison("id", ">=", n - 100))
     got = sorted(r.id for r in df.where(f"id >= {n - 100}").collect())
     assert got == list(range(n - 100, n))
 
@@ -358,7 +359,7 @@ def test_orc_scan_row_group_pruning_end_to_end(spark, tmp_path):
         spark, path,
         schema="id long, rid long, name string, val double, "
                "ts timestamp_ntz, dec decimal(12,2)",
-        predicate=("id", 54321, 54321),
+        predicate=Comparison("id", "=", 54321),
     )
     got = df.where("id = 54321").collect()
     assert len(got) == 1 and got[0].rid == int(tbl.column("rid")[54321].as_py())
@@ -497,7 +498,8 @@ def test_row_group_seek_multi_group_range(tmp_path):
         fr = fh.read(st.footer_length)
     lo, hi = 25_000, 74_999  # groups 2..7 of 10 exactly
     out, kept, total = decode_stripe_pruned(
-        body, fr, meta, st.number_of_rows, "id", lo=lo, hi=hi)
+        body, fr, meta, st.number_of_rows,
+        pred=And(Comparison("id", ">=", lo), Comparison("id", "<=", hi)))
     assert 0 < kept < total
     ids = out.column("id").to_pylist()
     assert min(ids) <= lo and max(ids) >= hi  # whole groups, superset of range
@@ -524,8 +526,8 @@ def test_pruned_decode_respects_projection(tmp_path):
     try:
         of.DECODED_COLUMNS.clear()
         out, kept, total = of.decode_stripe_pruned(
-            body, fr, meta, st.number_of_rows, "id", eq=54321,
-            columns=["id", "name"])
+            body, fr, meta, st.number_of_rows,
+            pred=Comparison("id", "=", 54321), columns=["id", "name"])
         assert 0 < kept < total
         assert out.column_names == ["id", "name"]
         decoded = set(of.DECODED_COLUMNS)
@@ -537,7 +539,8 @@ def test_pruned_decode_respects_projection(tmp_path):
         # projecting AWAY the predicate column still prunes via its index
         of.DECODED_COLUMNS.clear()
         out2, kept2, _ = of.decode_stripe_pruned(
-            body, fr, meta, st.number_of_rows, "id", eq=54321, columns=["name"])
+            body, fr, meta, st.number_of_rows,
+            pred=Comparison("id", "=", 54321), columns=["name"])
         assert kept2 == kept and out2.column_names == ["name"]
         assert set(of.DECODED_COLUMNS) == {"name"}
     finally:
@@ -587,7 +590,8 @@ def test_nested_row_group_seek(tmp_path):
         fr = fh.read(stripe.footer_length)
     for probe in (0, 9999, 10000, 34567, stripe.number_of_rows - 1):
         out, kept, total = decode_stripe_pruned(
-            body, fr, meta, stripe.number_of_rows, "id", eq=probe)
+            body, fr, meta, stripe.number_of_rows,
+            pred=Comparison("id", "=", probe))
         assert 0 < kept < total, (probe, kept, total)
         ids = out.column("id").to_pylist()
         assert probe in ids
@@ -613,7 +617,8 @@ def test_nested_row_group_seek_range_all_columns(tmp_path):
         body = fh.read(stripe.index_length + stripe.data_length)
         fr = fh.read(stripe.footer_length)
     out, kept, total = decode_stripe_pruned(
-        body, fr, meta, stripe.number_of_rows, "id", lo=15000, hi=34999)
+        body, fr, meta, stripe.number_of_rows,
+        pred=And(Comparison("id", ">=", 15000), Comparison("id", "<=", 34999)))
     assert 0 < kept < total
     ids = out.column("id").to_pylist()
     lo_g, hi_g = min(ids), max(ids) + 1
@@ -642,7 +647,7 @@ def test_truncated_row_index_falls_back(tmp_path, monkeypatch):
 
     monkeypatch.setattr(of, "_parse_row_index", truncated)
     out, kept, total = of.decode_stripe_pruned(
-        body, fr, meta, st.number_of_rows, "id", eq=54321)
+        body, fr, meta, st.number_of_rows, pred=Comparison("id", "=", 54321))
     # probe lives in group 5; entries are short -> full-decode fallback
     assert kept == total
     assert out.num_rows == st.number_of_rows
@@ -667,7 +672,8 @@ def test_in_list_pruning(tmp_path):
         body = fh.read(st.index_length + st.data_length)
         fr = fh.read(st.footer_length)
     out, kept, total = decode_stripe_pruned(
-        body, fr, meta, st.number_of_rows, "id", eq=[1234, 91234])
+        body, fr, meta, st.number_of_rows,
+        pred=Or(Comparison("id", "=", 1234), Comparison("id", "=", 91234)))
     assert kept == 2 and total >= 10, (kept, total)
     ids = set(out.column("id").to_pylist())
     assert 1234 in ids and 91234 in ids
@@ -779,7 +785,7 @@ def test_our_writer_dict_column_group_seek(tmp_path):
         body = fh.read(st.index_length + st.data_length)
         fr = fh.read(st.footer_length)
     out, kept, total = decode_stripe_pruned(
-        body, fr, meta, st.number_of_rows, "id", eq=25001)
+        body, fr, meta, st.number_of_rows, pred=Comparison("id", "=", 25001))
     assert 0 < kept < total
     ids = out.column("id").to_pylist()
     i = ids.index(25001)
@@ -873,13 +879,13 @@ def test_null_stats_group_pruning(tmp_path):
             fr = fh.read(st.footer_length)
         # IS NOT NULL: the all-null group 0 must be pruned
         out, kept, total = decode_stripe_pruned(
-            body, fr, meta, st.number_of_rows, "v", not_null=True)
+            body, fr, meta, st.number_of_rows, pred=IsNotNull("v"))
         assert kept == total - 1, (path, kept, total)
         got = [x for x in out.column("v").to_pylist() if x is not None]
         assert got == [i * 2 for i in range(10000, n)]
         # IS NULL: only the all-null group may survive
         out2, kept2, _ = decode_stripe_pruned(
-            body, fr, meta, st.number_of_rows, "v", not_null=False)
+            body, fr, meta, st.number_of_rows, pred=IsNull("v"))
         assert kept2 == 1, (path, kept2)
         assert set(out2.column("v").to_pylist()) == {None}
 
@@ -920,7 +926,7 @@ def test_orcx_null_and_prefix_pushdown(spark, tmp_path):
 
     r = OrcRustReader({"path": path})
     list(r.pushFilters([StringStartsWith(("s",), "abc")]))
-    assert r._predicates() == [{"column": "s", "lo": "abc", "hi": "abd"}]
+    assert r.pushed == [And(Comparison("s", ">=", "abc"), Comparison("s", "<", "abd"))]
 
 
 def test_date_timestamp_stats_pruning(tmp_path):
@@ -984,17 +990,16 @@ def test_multi_column_predicate_intersection(tmp_path):
         microseconds=1_700_000_000_000_000 + 54_999)
     out, kept, total = decode_stripe_pruned(
         body, fr, meta, st.number_of_rows,
-        predicates=[dict(column="id", lo=35000),
-                    dict(column="ts", hi=hi_ts)])
+        pred=And(Comparison("id", ">=", 35000), Comparison("ts", "<=", hi_ts)))
     # intersection = groups 3..5 (3 groups); either predicate alone keeps
     # 7 and 6 groups respectively
     assert kept == 3, (kept, total)
     ids = out.column("id").to_pylist()
     assert min(ids) == 30000 and max(ids) == 59999
     _, k_id, _ = decode_stripe_pruned(body, fr, meta, st.number_of_rows,
-                                      predicates=[dict(column="id", lo=35000)])
+                                      pred=Comparison("id", ">=", 35000))
     _, k_ts, _ = decode_stripe_pruned(body, fr, meta, st.number_of_rows,
-                                      predicates=[dict(column="ts", hi=hi_ts)])
+                                      pred=Comparison("ts", "<=", hi_ts))
     assert kept < k_id and kept < k_ts
 
 
@@ -1045,7 +1050,7 @@ def test_orc_scan_projection(spark, tmp_path):
     assert got.name == tbl.column("name")[77].as_py()
 
     df2 = orc_scan(spark, path, schema="id long, name string",
-                   columns=["id", "name"], predicate=("id", 54321, 54321))
+                   columns=["id", "name"], predicate=Comparison("id", "=", 54321))
     row = df2.where("id = 54321").collect()
     assert len(row) == 1 and row[0].name == tbl.column("name")[54321].as_py()
 
@@ -1214,7 +1219,7 @@ def test_union_row_group_seek(tmp_path):
         body = fh.read(st.index_length + st.data_length)
         fr = fh.read(st.footer_length)
     out, kept, total = decode_stripe_pruned(
-        body, fr, meta, st.number_of_rows, "id", eq=15033)
+        body, fr, meta, st.number_of_rows, pred=Comparison("id", "=", 15033))
     assert kept == 1 and total == 3, (kept, total)
     rows = out.column("id").to_pylist()
     i = rows.index(15033)
@@ -1297,7 +1302,7 @@ def test_nullable_boolean_indexed_roundtrip(tmp_path):
             fr = fh.read(s.footer_length)
         out, decoded, total = decode_stripe_pruned(
             body, fr, meta, s.number_of_rows,
-            predicates=[dict(column="id", lo=21000, hi=21004)])
+            pred=And(Comparison("id", ">=", 21000), Comparison("id", "<=", 21004)))
         assert decoded < total
         got = out.filter(
             pa.compute.and_(pa.compute.greater_equal(out.column("id"), 21000),
@@ -1444,7 +1449,7 @@ def test_empty_projection_counts_rows(tmp_path):
     assert ranged.num_rows == 20 and ranged.num_columns == 0  # [5,25)
     pred, kept_p, _ = decode_stripe_pruned(
         body, footer_raw, meta, st.number_of_rows, columns=[],
-        predicates=[{"column": "a", "lo": 90, "hi": None}])
+        pred=Comparison("a", ">=", 90))
     assert kept_p < total  # stats actually pruned groups
     # groups [80,96) and [96,100) survive lo=90: 16 + 4 rows
     assert pred.num_rows == 20 and pred.num_columns == 0
@@ -1487,7 +1492,7 @@ def test_mixed_type_bounds_keep_not_crash(tmp_path):
         footer_raw = fh.read(st.footer_length)
     out, kept, total = decode_stripe_pruned(
         body, footer_raw, meta, st.number_of_rows,
-        predicates=[{"column": "c", "lo": 5, "hi": "z"}])
+        pred=And(Comparison("c", ">=", 5), Comparison("c", "<=", "z")))
     # int lo=5 prunes group 0's complement correctly; str hi keeps all
     assert out.num_rows == 50 or kept <= total
     assert out.column("c").to_pylist() == sorted(out.column("c").to_pylist())
@@ -1593,7 +1598,8 @@ def test_pruned_decode_wraps_corruption(tmp_path):
     cut = body[: st.index_length + (st.data_length // 16)]
     with pytest.raises(ValueError, match="corrupt ORC stripe"):
         decode_stripe_pruned(cut, fr, meta, st.number_of_rows,
-                             "id", lo=5_000, hi=15_000)
+                             pred=And(Comparison("id", ">=", 5_000),
+                                      Comparison("id", "<=", 15_000)))
     with pytest.raises(ValueError, match="corrupt ORC stripe"):
         decode_stripe(cut, fr, meta, st.number_of_rows)
 
@@ -1648,7 +1654,8 @@ def test_stripe_decode_corruption_fuzz(tmp_path):
         outcomes = []
         for fn, kw in ((decode_stripe, {}),
                        (decode_stripe_pruned,
-                        {"column": "id", "lo": 3_000, "hi": 12_000})):
+                        {"pred": And(Comparison("id", ">=", 3_000),
+                                     Comparison("id", "<=", 12_000))})):
             try:
                 fn(buf, fr, meta, st.number_of_rows, **kw)
                 outcomes.append("ok")
@@ -1722,7 +1729,7 @@ def test_writer_tz_out_of_ns_range(tmp_path):
 
 def test_pruned_uncomparable_probe_keeps_not_crashes(tmp_path):
     """A probe value outside every stats family must KEEP all groups
-    (three-valued contract, _stats_comparable) — and if a TypeError ever
+    (three-valued contract, predicate.comparable) — and if a TypeError ever
     does escape a decode impl, the corruption guard re-raises it raw
     instead of mislabeling it 'corrupt ORC stripe' (code-review r7,
     second pass)."""
@@ -1744,7 +1751,8 @@ def test_pruned_uncomparable_probe_keeps_not_crashes(tmp_path):
         pass
 
     out, kept, total = decode_stripe_pruned(
-        body, fr, meta, st.number_of_rows, "id", lo=Odd(), hi=Odd())
+        body, fr, meta, st.number_of_rows,
+        pred=And(Comparison("id", ">=", Odd()), Comparison("id", "<=", Odd())))
     assert kept == total and out.num_rows == st.number_of_rows
 
     def boom():
@@ -1795,7 +1803,8 @@ def test_pruned_predicate_property_equals_full_filter(lo, span):
         body = fh.read(st0.index_length + st0.data_length)
         fr = fh.read(st0.footer_length)
     pruned, kept, total = decode_stripe_pruned(
-        body, fr, meta, st0.number_of_rows, "id", lo=lo, hi=hi)
+        body, fr, meta, st0.number_of_rows,
+        pred=And(Comparison("id", ">=", lo), Comparison("id", "<=", hi)))
     full = decode_stripe(body, fr, meta, st0.number_of_rows)
 
     def residual(t):

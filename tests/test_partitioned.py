@@ -10,6 +10,7 @@ import os
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, IsNull
 
 from orc_rust_spark.sources.orc_file import orc_to_table, write_orc
 
@@ -60,7 +61,7 @@ def test_partition_pruning_skips_files(orcx, part_dir):
     from orc_rust_spark.sources.datasource import OrcRustReader
 
     r = OrcRustReader({"path": part_dir})
-    r.bounds["lang"] = ["en", "en"]
+    list(r.pushFilters([EqualTo(("lang",), "en")]))
     parts = [p for p in r.partitions() if p.offset >= 0]
     assert parts, "pruned everything"
     assert all(f"lang=en{os.sep}" in p.path or "lang=en/" in p.path
@@ -79,7 +80,7 @@ def test_null_partition_semantics(orcx, part_dir):
     from orc_rust_spark.sources.datasource import OrcRustReader
 
     r = OrcRustReader({"path": part_dir})
-    r.null_preds["lang"] = False  # IsNull
+    list(r.pushFilters([IsNull(("lang",))]))
     parts = [p for p in r.partitions() if p.offset >= 0]
     assert parts and all("__HIVE_DEFAULT_PARTITION__" in p.path
                          for p in parts)
@@ -296,7 +297,7 @@ def test_date_partition_inference(orcx, tmp_path):
     )
 
     r = OrcRustReader({"path": d})
-    r.bounds["day"] = [datetime.date(2024, 1, 3), None]
+    list(r.pushFilters([GreaterThanOrEqual(("day",), datetime.date(2024, 1, 3))]))
     parts = [p for p in r.partitions() if p.offset >= 0]
     assert parts and all("day=2024-01-03" in p.path for p in parts)
     assert _infer_part_ddl(["2024-13-40"]) == "string"

@@ -13,8 +13,12 @@ from orc_rust_spark.operators.predicate import (
     IsNull,
     Not,
     Or,
+)
+from orc_rust_spark.operators.pruned_read import (
     prune_chunks_predicate,
     pruned_scan,
+    rg_summaries,
+    to_spark,
 )
 
 SCHEMA = T.StructType(
@@ -92,7 +96,7 @@ def test_pruned_scan_end_to_end(spark, encoded):
     rows, keys = pruned_scan(chunks, SCHEMA, pred)
     got = sorted(r.id for r in rows.collect())
     want = sorted(
-        r.id for r in src.where(pred.to_spark()).collect()
+        r.id for r in src.where(to_spark(pred)).collect()
     )
     assert got == want and len(got) == 40
     assert keys.count() == 2  # middle chunk pruned
@@ -115,37 +119,35 @@ def test_rg_keep_composition_intersects_and_unions():
             "min": ["0", "100", "200", "300"], "max": ["99", "199", "299", "399"]}
     rg_b = {"codec": "direct", "n": [10] * 4, "nulls": [0, 10, 0, 0],
             "min": ["a", "e", "k", "p"], "max": ["d", "j", "o", "z"]}
-    rgs = {"a": rg_a, "b": rg_b}
+    rgs = {"a": rg_summaries(rg_a), "b": rg_summaries(rg_b)}
 
     a_cond = Comparison("a", ">=", 150)        # groups {1,2,3}
-    b_cond = Comparison("b", "<", "k")         # groups {0,1}
-    assert a_cond.rg_keep(rgs, 4) == {1, 2, 3}
-    assert b_cond.rg_keep(rgs, 4) == {0, 1}
+    # groups {0,1} by min/max, but group 1 of b is all NULL, where no
+    # comparison holds
+    b_cond = Comparison("b", "<", "k")
+    assert a_cond.keep(rgs, 4) == {1, 2, 3}
+    assert b_cond.keep(rgs, 4) == {0}
     # And: intersection — strictly smaller than either single-column plan
-    both = And(a_cond, b_cond).rg_keep(rgs, 4)
-    assert both == {1}
-    assert len(both) < len(a_cond.rg_keep(rgs, 4))
-    assert len(both) < len(b_cond.rg_keep(rgs, 4))
+    both = And(a_cond, b_cond).keep(rgs, 4)
+    assert both == set()
+    assert len(both) < len(a_cond.keep(rgs, 4))
+    assert len(both) < len(b_cond.keep(rgs, 4))
     # Or: union
-    assert Or(a_cond, b_cond).rg_keep(rgs, 4) == {0, 1, 2, 3}
+    assert Or(a_cond, b_cond).keep(rgs, 4) == {0, 1, 2, 3}
     # null-aware + Not push-down
-    assert IsNotNull("b").rg_keep(rgs, 4) == {0, 2, 3}
-    assert And(a_cond, IsNotNull("b")).rg_keep(rgs, 4) == {2, 3}
-    assert Not(Comparison("a", "<", 100)).rg_keep(rgs, 4) == {1, 2, 3}
+    assert IsNotNull("b").keep(rgs, 4) == {0, 2, 3}
+    assert And(a_cond, IsNotNull("b")).keep(rgs, 4) == {2, 3}
+    assert Not(Comparison("a", "<", 100)).keep(rgs, 4) == {1, 2, 3}
     # unindexed column keeps the universe
-    assert Comparison("zz", "=", 5).rg_keep(rgs, 4) == {0, 1, 2, 3}
+    assert Comparison("zz", "=", 5).keep(rgs, 4) == {0, 1, 2, 3}
 
 
 def test_pruned_scan_rg_composition_end_to_end(spark):
     """pruned_scan with a two-column And decodes only the intersected
     groups and returns exactly the matching rows."""
     from orc_rust_spark.operators.encode import encode_table
-    from orc_rust_spark.operators.predicate import (
-        And,
-        Comparison,
-        pruned_scan,
-        rg_keep_for_chunk,
-    )
+    from orc_rust_spark.operators.predicate import And, Comparison
+    from orc_rust_spark.operators.pruned_read import pruned_scan, rg_keep_for_chunk
     from pyspark.sql import types as T
 
     n = 8000
@@ -189,7 +191,7 @@ def test_unusable_probe_types_keep_all_chunks(spark, encoded):
 
 def test_decimal_codec_chunks_never_pruned_by_predicate(spark):
     """Mantissa stats (decimal codec) are not comparable to user values:
-    Comparison.might_match must keep those chunks (code-review r6 — the
+    might_match must keep those chunks (code-review r6 — the
     pivot previously dropped the codec so d=5.0 pruned everything)."""
     import decimal as D
 
@@ -263,7 +265,7 @@ def test_pruned_scan_chunks_straddling_arrow_batches(spark):
         got = sorted(pruned_scan(chunks, schema, pred)[0].collect())
     finally:
         spark.conf.set(key, old)
-    want = sorted(df.where(pred.to_spark()).collect())
+    want = sorted(df.where(to_spark(pred)).collect())
     assert got == want and len(want) > 500
     chunks.unpersist()
 
@@ -282,3 +284,37 @@ def test_mixed_stride_grids_fall_back_to_full_decode(spark):
     decoded, _ = pruned_scan(chunks, SCHEMA, Comparison("id", "=", 3999))
     got = decoded.collect()
     assert len(got) == 1 and got[0].name == "n03999"
+
+
+def test_float_stats_keep_inf_and_nan_units(spark):
+    """±inf are ordinary float bounds and Spark orders NaN above every
+    number, so neither a chunk nor a row group may be skipped by `x > 2.0`
+    over [1.0, inf, nan] or by `x < 0.5` over [1.0, -inf] (the float stats
+    used to cover finite values only). The chunk level reads the stored
+    "inf"/"nan" spellings back through try_cast."""
+    import json
+    import math
+
+    import pyarrow as pa
+
+    from orc_rust_spark.operators.encode import encode_chunk
+
+    inf, nan = math.inf, math.nan
+    cast = spark.sql("SELECT try_cast('inf' AS double), try_cast('-inf' AS double), "
+                     "try_cast('nan' AS double)").first()
+    assert cast[0] == inf and cast[1] == -inf and math.isnan(cast[2])
+    schema = T.StructType([T.StructField("x", T.DoubleType())])
+    for vals, pred, n_match in (
+        ([1.0, inf, nan], Comparison("x", ">", 2.0), 2),
+        ([1.0, -inf], Comparison("x", "<", 0.5), 1),
+        ([1.0, nan], Comparison("x", "=", nan), 1),
+    ):
+        batch = encode_chunk(pa.table({"x": vals}), 0, 0, {"x": {"row_index": True}})
+        data = next(r for r in batch.to_pylist() if r["stream_kind"] == "DATA")
+        rg = json.loads(data["stats_json"])["rg"]
+        assert pred.keep({"x": rg_summaries(rg)}, 1) == {0}, (vals, pred)
+        df = spark.createDataFrame([(v,) for v in vals], schema).coalesce(1)
+        chunks = encode_table(df, plan={"x": {"row_index": True}}).cache()
+        assert prune_chunks_predicate(chunks, pred).count() == 1, (vals, pred)
+        assert pruned_scan(chunks, schema, pred)[0].count() == n_match, (vals, pred)
+        chunks.unpersist()

@@ -2,9 +2,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from orc_rust_spark.operators.encode import encode_table
-from orc_rust_spark.operators.predicate import And, Comparison, prune_chunks_predicate
+from orc_rust_spark.operators.predicate import And, Comparison
 from orc_rust_spark.operators.pruned_read import (
     prune_chunks_bloom,
+    prune_chunks_predicate,
     pruned_point_lookup,
 )
 from orc_rust_spark.sources.webtext import WEBTEXT_SCHEMA, webtext_df

@@ -12,8 +12,8 @@ from pyspark.sql import types as T
 
 from orc_rust_spark.operators.decode import decode_chunk_arrays
 from orc_rust_spark.operators.encode import encode_chunk
-from orc_rust_spark.operators.predicate import _rg_keep_groups
-from orc_rust_spark.operators.pruned_read import pruned_point_lookup
+from orc_rust_spark.operators.predicate import Comparison
+from orc_rust_spark.operators.pruned_read import pruned_point_lookup, rg_summaries
 
 RG_PLAN = {
     "id": {"row_index": True, "row_index_stride": 1000, "bloom": True},
@@ -63,8 +63,14 @@ def test_rg_partial_decode_matches_slices():
         assert out[c].cast(want.type).equals(want), c
 
 
+def _rg_keep_groups(rg: dict, op: str, value) -> list[int]:
+    """Groups of one indexed column that ``column op value`` might match."""
+    return sorted(Comparison("c", op, value).keep({"c": rg_summaries(rg)}, len(rg["n"])))
+
+
 def test_rg_keep_groups_typed():
-    rg = {"codec": "rle_v2", "n": [10, 10], "min": ["90", "995"], "max": ["99", "1004"]}
+    rg = {"codec": "rle_v2", "n": [10, 10], "nulls": [0, 0],
+          "min": ["90", "995"], "max": ["99", "1004"]}
     assert _rg_keep_groups(rg, ">=", 500) == [1]
     assert _rg_keep_groups(rg, "=", 998) == [1]
     assert _rg_keep_groups(rg, "<=", 99) == [0]
@@ -75,14 +81,15 @@ def test_rg_keep_truncated_string_max_not_pruned():
     truncation limit is a PREFIX of the true max (a lower bound), so
     `max < lo` must not prune the group. Min side stays prunable."""
     rg = {
-        "codec": "direct", "n": [10, 10],
+        "codec": "direct", "n": [10, 10], "nulls": [0, 0],
         "min": ["a" * 10, "m" * 10],
         # group 0's true max is "a"*100, stored truncated to 64 chars
         "max": ["a" * 64, "m" * 20],
     }
     assert _rg_keep_groups(rg, "=", "a" * 100) == [0]
     # an untruncated max still prunes normally
-    rg2 = {"codec": "direct", "n": [10, 10], "min": ["a", "m"], "max": ["c", "p"]}
+    rg2 = {"codec": "direct", "n": [10, 10], "nulls": [0, 0],
+           "min": ["a", "m"], "max": ["c", "p"]}
     assert _rg_keep_groups(rg2, "=", "z") == []
     # min is a prefix of the true min -> lower bound -> `min > hi` is sound:
     # group 1 (min "m"*10 > hi) pruned, group 0 kept
@@ -94,12 +101,12 @@ def test_rg_keep_decimal_and_mismatched_probes_never_prune():
     (Decimal, datetime) aren't stat-comparable — neither may prune."""
     from decimal import Decimal
 
-    rg = {"codec": "decimal", "n": [10, 10], "min": ["1000", "5000"],
-          "max": ["1999", "5999"]}
+    rg = {"codec": "decimal", "n": [10, 10], "nulls": [0, 0],
+          "min": ["1000", "5000"], "max": ["1999", "5999"]}
     assert _rg_keep_groups(rg, "=", Decimal("19.99")) == [0, 1]
     assert _rg_keep_groups(rg, "=", 1500) == [0, 1]
     # int probe against a string-stat codec: type mismatch, keep all
-    rg2 = {"codec": "direct", "n": [5], "min": ["a"], "max": ["b"]}
+    rg2 = {"codec": "direct", "n": [5], "nulls": [0], "min": ["a"], "max": ["b"]}
     assert _rg_keep_groups(rg2, "=", 7) == [0]
 
 
@@ -130,8 +137,10 @@ def test_chunk_level_decimal_probe_keeps_all(spark):
     from decimal import Decimal
 
     from orc_rust_spark.operators.encode import encode_table
-    from orc_rust_spark.operators.predicate import Comparison, prune_chunks_predicate
-    from orc_rust_spark.operators.pruned_read import prune_chunks_bloom
+    from orc_rust_spark.operators.pruned_read import (
+        prune_chunks_bloom,
+        prune_chunks_predicate,
+    )
 
     df = spark.createDataFrame(
         [(i, Decimal(i) / 100) for i in range(2000)],

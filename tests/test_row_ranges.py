@@ -8,6 +8,7 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
+from orc_rust_spark.operators.predicate import And, Comparison
 from orc_rust_spark.sources.orc_file import (
     OrcWriter,
     decode_stripe_pruned,
@@ -86,7 +87,7 @@ def test_ranges_compose_with_predicate(ranged_orc):
     # predicate keeps ids < 6000 (groups 0..1 by stats); ranges keep only
     # [2500, 3000) — the intersection decodes ONE group
     out, decoded, total = decode_stripe_pruned(
-        body, footer, meta, rows, column="id", hi=5_999,
+        body, footer, meta, rows, pred=Comparison("id", "<=", 5_999),
         row_ranges=[(2_500, 3_000)])
     assert decoded == 1 and total == 2
     assert out.column("id").to_pylist() == list(range(2_500, 3_000))
@@ -113,7 +114,9 @@ def test_orc_scan_row_ranges_end_to_end(spark, ranged_orc):
     assert row["val"] == 45_050 * 0.5
 
     # composes with a predicate through the same AND algebra
-    df2 = orc_scan(spark, path, schema, predicate=("id", 45_000, 45_049),
+    df2 = orc_scan(spark, path, schema,
+                   predicate=And(Comparison("id", ">=", 45_000),
+                                 Comparison("id", "<=", 45_049)),
                    row_ranges=ranges)
     got2 = sorted(r["id"] for r in df2.where(F.col("id") <= 45_049).collect())
     assert got2 == list(range(45_000, 45_050))
@@ -212,7 +215,8 @@ def test_orc_scan_readahead_many_stripes_per_task(spark, tmp_path):
     assert agg["n"] == n and agg["s"] == n * (n - 1) // 2
     # with a predicate + ranges through the same path
     df2 = orc_scan(spark, path, "id long, name string",
-                   predicate=("id", 100, 8_200),
+                   predicate=And(Comparison("id", ">=", 100),
+                                 Comparison("id", "<=", 8_200)),
                    row_ranges=[(0, 8_201)])
     got = df2.where((F.col("id") >= 100) & (F.col("id") <= 8_200))
     assert got.count() == 8_101

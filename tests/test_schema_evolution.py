@@ -60,9 +60,10 @@ def test_predicate_on_evolved_column(spark, evolved_dir):
     surface with nulls and the caller's residual filter decides."""
     from pyspark.sql import functions as F
 
+    from orc_rust_spark.operators.predicate import Comparison
     from orc_rust_spark.sources.orc_file import orc_scan
 
-    df = orc_scan(spark, evolved_dir, predicate=("lang", "en", "en"),
+    df = orc_scan(spark, evolved_dir, predicate=Comparison("lang", "=", "en"),
                   missing_as_null=True)
     hits = df.where(F.col("lang") == "en").collect()
     assert [(r["id"], r["text"]) for r in hits] == [(4, "d")]
@@ -207,6 +208,8 @@ def test_orcx_evolved_pruning_still_prunes_new_files(orcx, tmp_path):
     """Stripe pruning on an evolved column still engages for files that
     HAVE it: an eq probe outside new.orc's [10,19] range keeps old.orc
     (no stats) but drops new.orc's stripe at planning."""
+    from pyspark.sql.datasource import EqualTo
+
     from orc_rust_spark.sources.datasource import OrcRustReader
 
     write_orc(pa.table({"id": pa.array([1, 2], type=pa.int64())}),
@@ -216,7 +219,7 @@ def test_orcx_evolved_pruning_still_prunes_new_files(orcx, tmp_path):
                         "score": pa.array([float(i) for i in range(10)])}),
               str(tmp_path / "new.orc"), compression="zlib")
     r = OrcRustReader({"path": str(tmp_path), "missing_as_null": "true"})
-    r.bounds["score"] = [99.0, 99.0]  # eq probe outside new.orc's range
+    list(r.pushFilters([EqualTo(("score",), 99.0)]))  # outside new.orc's range
     parts = r.partitions()
     paths = {p.path for p in parts if p.offset >= 0}
     assert any(p.endswith("old.orc") for p in paths)   # can't prune: kept

@@ -128,6 +128,7 @@ def test_union_written_file_seek_decodes_groups(tmp_path):
     tag stream and every variant child: a point lookup seek-decodes only
     the matching 10k group (groups_decoded < total) and reassembles the
     tagged struct correctly across irregular per-group variant counts."""
+    from orc_rust_spark.operators.predicate import Comparison
     from orc_rust_spark.sources.orc_file import decode_stripe_pruned
 
     n = 25_000
@@ -150,7 +151,7 @@ def test_union_written_file_seek_decodes_groups(tmp_path):
         footer = fh.read(s.footer_length)
     for probe in (23_456, 7, 10_000):
         out, dec, tot = decode_stripe_pruned(
-            body, footer, meta, s.number_of_rows, column="id", eq=probe)
+            body, footer, meta, s.number_of_rows, pred=Comparison("id", "=", probe))
         assert dec == 1 and tot == 3
         i = out.column("id").to_pylist().index(probe)
         u = out.column("u").combine_chunks()
